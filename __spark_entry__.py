@@ -1856,15 +1856,10 @@ def _as_double(col) -> F.Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _cos(a, b) -> F.Column:
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    return dot / (na * nb)
-
-
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k against the vec_id=0 query vector."""
+    from circus_train_spark.pipeline.similarity import cosine
+
     e = _read(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(
         _as_double(F.col("embedding")).alias("q")
@@ -1874,7 +1869,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(_cos(_as_double(F.col("embedding")), F.col("q")), 4).alias("sim"),
+            F.round(cosine(_as_double(F.col("embedding")), F.col("q")), 4).alias("sim"),
         )
         .orderBy(F.desc("sim"), "vec_id")
         .limit(10)
@@ -1889,6 +1884,8 @@ def q_sim_pairs_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the window becomes TWO hash equi-joins (same block + next block)
     with the range as a residual — the standard banded-self-join shape that
     survives any table size."""
+    from circus_train_spark.pipeline.similarity import cosine
+
     e = _read(spark, sf_dir, "embeddings").select(
         F.col("vec_id"),
         _as_double(F.col("embedding")).alias("v"),
@@ -1901,7 +1898,7 @@ def q_sim_pairs_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = [
         F.col("a.vec_id").alias("id_a"),
         F.col("b.vec_id").alias("id_b"),
-        F.round(_cos(F.col("a.v"), F.col("b.v")), 4).alias("sim"),
+        F.round(cosine(F.col("a.v"), F.col("b.v")), 4).alias("sim"),
     ]
     same = a.join(b, (F.col("a.blk") == F.col("b.blk")) & in_window).select(*proj)
     nxt = a.join(b, (F.col("a.blk") + 1 == F.col("b.blk")) & in_window).select(*proj)
@@ -2385,6 +2382,16 @@ def _ann_oracle_sql(n_planes: int = 8, dim: int = 64, k: int = 10, seed: int = 4
     """
 
 
+def _bucket_cap_sql(rows: str, bucket: str, max_bucket: int) -> str:
+    """DuckDB replica of ``dedup._bucket_pairs``' cap: the rows of ``rows``
+    whose ``bucket`` holds at most ``max_bucket`` rows (the only ones
+    paired)."""
+    return (
+        f"SELECT * FROM {rows} QUALIFY"
+        f" count(*) OVER (PARTITION BY {bucket}) <= {max_bucket}"
+    )
+
+
 def _near_dup_oracle_sql(
     n_planes: int = 4,
     dim: int = 64,
@@ -2410,8 +2417,7 @@ def _near_dup_oracle_sql(
     return f"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         b AS (SELECT vec_id, v, {bucket('v')} AS bucket FROM e),
-        sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM b),
-        f AS (SELECT * FROM sized WHERE n <= {max_bucket})
+        f AS ({_bucket_cap_sql('b', 'bucket', max_bucket)})
         SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
                round(list_dot_product(a.v, bb.v) /
                      (sqrt(list_dot_product(a.v, a.v)) *
@@ -2423,7 +2429,7 @@ def _near_dup_oracle_sql(
     """
 
 
-_SEMANTIC_DEDUP_SQL = """
+_SEMANTIC_DEDUP_SQL = f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     nn AS (SELECT count(*) AS n FROM e),
     cents AS (
@@ -2440,8 +2446,9 @@ _SEMANTIC_DEDUP_SQL = """
                         c.list_id DESC) AS rn
       FROM e CROSS JOIN cents c),
     al AS (SELECT vec_id, v, list_id FROM assign WHERE rn = 1),
+    paired AS ({_bucket_cap_sql('al', 'list_id', 50_000)}),
     drops AS (
-      SELECT DISTINCT b.vec_id FROM al a JOIN al b
+      SELECT DISTINCT b.vec_id FROM paired a JOIN paired b
       ON a.list_id = b.list_id AND a.vec_id < b.vec_id
       WHERE round(list_dot_product(a.v, b.v) /
                   (sqrt(list_dot_product(a.v, a.v)) *

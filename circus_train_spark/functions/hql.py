@@ -6,9 +6,13 @@ source ``db.table`` reference points at its replica counterpart
 four textual forms per mapping — unescaped qualified name, unescaped
 ``table.`` reference (which also rewrites column qualifiers), and the two
 backtick-escaped variants (``TableTranslation.java:22-42``) — each
-case-insensitively, in that order. ``translate_hql`` is the parity
-function: the reference's own translator test vectors pass verbatim
-(``HqlTranslatorTest.java:92-130``, mirrored in ``tests/test_views.py``).
+case-insensitively. ``translate_hql`` rewrites the same four forms and
+passes the reference's own translator test vectors verbatim
+(``HqlTranslatorTest.java:92-130``, mirrored in ``tests/test_views.py``),
+but it rewrites all mappings in ONE pass on whole identifiers, where the
+reference chains substring ``replaceAll`` calls: ``db.tok`` is never
+rewritten inside ``db.tok2``, and a replacement is never re-scanned by a
+later mapping.
 
 It is pure driver-side string work over metadata (never row data), so
 there is nothing to distribute; execution of a translated view is plain
@@ -22,11 +26,12 @@ import re
 __all__ = ["translate_hql"]
 
 
-def _sub(hql: str, literal: str, replacement: str) -> str:
-    # Java: replaceAll("(?i)" + form.replace(".", "\\."), replacement).
-    # re.escape subsumes the reference's dot-escaping; a callable
-    # replacement keeps backslashes/group refs in names inert.
-    return re.sub(re.escape(literal), lambda _m: replacement, hql, flags=re.IGNORECASE)
+def _edges(form: str) -> str:
+    # a form that starts/ends with an identifier character must not touch
+    # another one there: whole identifiers only
+    head = r"(?<!\w)" if re.match(r"\w", form) else ""
+    tail = r"(?!\w)" if re.match(r"\w", form[-1]) else ""
+    return head + re.escape(form) + tail
 
 
 def translate_hql(
@@ -39,11 +44,11 @@ def translate_hql(
 
     ``mappings`` maps ``"src_db.src_table" -> "dst_db.dst_table"``. Both
     sides must be two-part qualified names (the reference raises on
-    anything else, ``HqlTranslator.java:47-55``); pass
-    ``require_qualified=False`` to allow a single-part destination — used
-    internally to bind qualified names onto Spark temp views, which are
-    single-part by definition.
+    anything else, ``HqlTranslator.java:47-55``); ``require_qualified=False``
+    allows a single-part destination — ``bind_sql`` uses it to bind
+    qualified names onto Spark temp views, which are single-part.
     """
+    forms: dict[str, str] = {}  # lower-cased form -> replacement
     for src, dst in mappings.items():
         s = src.split(".")
         d = dst.split(".")
@@ -55,11 +60,22 @@ def translate_hql(
             raise ValueError(f"bad translated table name: {dst!r}")
         sdb, stbl = s
         dtbl = d[-1]
-        dst_qualified = dst
         dst_escaped = ".".join(f"`{part}`" for part in d)
-        # the reference's four substitutions, same order
-        hql = _sub(hql, f"{sdb}.{stbl}", dst_qualified)
-        hql = _sub(hql, f"{stbl}.", f"{dtbl}.")
-        hql = _sub(hql, f"`{sdb}`.`{stbl}`", dst_escaped)
-        hql = _sub(hql, f"`{stbl}`.", f"`{dtbl}`.")
-    return hql
+        # the reference's four forms, in its order; an earlier mapping wins
+        # a form two mappings share, as in the reference's replace chain
+        for form, repl in (
+            (f"{sdb}.{stbl}", dst),
+            (f"{stbl}.", f"{dtbl}."),
+            (f"`{sdb}`.`{stbl}`", dst_escaped),
+            (f"`{stbl}`.", f"`{dtbl}`."),
+        ):
+            forms.setdefault(form.lower(), repl)
+    if not forms:
+        return hql
+    # longest first, so ``db.t`` wins over a ``db.`` form at the same offset
+    ordered = sorted(forms, key=len, reverse=True)
+    pattern = re.compile(
+        "|".join(f"({_edges(f)})" for f in ordered), flags=re.IGNORECASE
+    )
+    # the matching group names the form; a callable keeps names inert
+    return pattern.sub(lambda m: forms[ordered[m.lastindex - 1]], hql)

@@ -66,9 +66,6 @@ def cluster(
     target_file_bytes: int = 512 * 1024 * 1024,
     partitions: list[str] | None = None,
     curve: str = "zorder",
-    # retained for CLI/API compatibility: byte-proportional per-source bins
-    # now handle skew explicitly, so no salt dimension is needed
-    n_salts: int = 16,  # noqa: ARG001 — deprecated, unused
     verify: bool = True,
     run_id: str | None = None,
     max_shard_bins: int = MAX_SHARD_BINS,

@@ -46,15 +46,15 @@ def bind_sql(
     """Register each binding as a temp view and rewrite ``hql`` onto the
     temp names. Returns (bound_sql, any_bound_df) — the DataFrame is only
     used to reach the SparkSession."""
-    bound = hql
+    temp_names = {}
     any_df = None
     for i, (qualified, src) in enumerate(sorted(bindings.items())):
         df = src.scan() if isinstance(src, TokenTable) else src
         tv = _temp_name(qualified, i)
         df.createOrReplaceTempView(tv)
-        bound = translate_hql(bound, {qualified: tv}, require_qualified=False)
+        temp_names[qualified] = tv
         any_df = df
-    return bound, any_df
+    return translate_hql(hql, temp_names, require_qualified=False), any_df
 
 
 def run_view(

@@ -7,7 +7,7 @@ Five strategies, all shuffle-conscious:
 - **MinHash + LSH** — word-shingle set → k minhashes (JVM-side:
   ``array_min`` over ``transform``-hashed shingles, no UDF) → band buckets →
   candidate pairs only within buckets → exact Jaccard verification on the
-  candidates. The cross-join explosion is bounded per bucket.
+  candidates.
 - **SimHash** — 64-bit sign-aggregated fingerprint (numpy bit unpack in an
   Arrow pandas UDF over JVM-prehashed token arrays); near-dups = equal
   fingerprints on rotated bands (hamming ≤ r by pigeonhole).
@@ -16,9 +16,18 @@ Five strategies, all shuffle-conscious:
   random-hyperplane LSH bucketing + in-bucket verification
   (see ``similarity.py`` for the primitives).
 
+Every bucketed strategy — MinHash-LSH and SimHash here, embedding near-dup
+and SemDeDup in ``similarity.py`` — draws its candidates from one
+generator, ``_bucket_pairs``: rows are bucketed once per band, a
+``(band, bucket)`` holding more than ``max_bucket`` rows produces no pairs
+(boilerplate/empty-doc clusters), and the rest self-join on
+``(band, bucket)`` with ``a.id < b.id`` — an equi-join, never a cartesian
+product. MinHash-LSH caps its 64-bit band buckets at ``MAX_BUCKET`` (1000)
+rows. SimHash caps whole fingerprints at ``MAX_BUCKET`` instead, because
+its 16-bit slice buckets fill from ordinary traffic at scale.
+
 At 100 TB: every strategy shuffles fixed-width signatures (8–256 bytes/row),
-not documents; buckets with pathological sizes are capped (``max_bucket``)
-and logged rather than cross-joined blindly.
+not documents.
 """
 
 from __future__ import annotations
@@ -195,6 +204,79 @@ def remove_boilerplate(
     )
 
 
+# ------------------------------------------------------------ bucket pairs
+
+MAX_BUCKET = 1000  # default bucket cap of the text near-dup strategies
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    id_col: str,
+    buckets: list[Column],
+    max_bucket: int | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of rows that share a bucket: the one in-bucket
+    self-join behind every near-dup strategy here and in ``similarity``.
+
+    ``buckets`` holds one bucket expression per band (all of one type). A
+    pair ``(id_a, id_b)`` with ``id_a < id_b`` is emitted when both rows
+    share a ``(band, bucket)`` holding at most ``max_bucket`` rows (any
+    size when ``None``); rows of an oversized bucket produce no pairs. A
+    pair colliding in several bands is emitted once per band, so callers
+    ``distinct`` what they keep. Each ``carry`` column comes out as
+    ``<carry>_a`` and ``<carry>_b``.
+
+    The capped bucket rows are materialized once (eager
+    ``localCheckpoint``): the bucket expressions and anything upstream of
+    them (signature, fingerprint UDF) run once per row rather than once
+    per join side. The returned (lazy) pairs read that checkpoint;
+    ``_release`` frees it once what the caller keeps is materialized.
+    """
+    banded = rows.select(
+        F.col(id_col).alias("_id"),
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), e.alias("bucket"))
+                    for b, e in enumerate(buckets)
+                ]
+            )
+        ).alias("_bb"),
+    ).select("_id", *carry, "_bb.band", "_bb.bucket")
+    if max_bucket is not None:
+        banded = (
+            banded.withColumn("_n", F.count("*").over(Window.partitionBy("band", "bucket")))
+            .filter(F.col("_n") <= max_bucket)
+            .drop("_n")
+        )
+    sized = banded.localCheckpoint(eager=True)
+    a, b = sized.alias("a"), sized.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a._id") < F.col("b._id")),
+    ).select(
+        F.col("a._id").alias("id_a"),
+        F.col("b._id").alias("id_b"),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+    )
+
+
+def _release(pairs: DataFrame) -> None:
+    """Unpersist the checkpoint behind ``pairs``, a frame derived from
+    ``_bucket_pairs`` output alone (so every RDD leaf of its plan is that
+    checkpoint). Call it only once everything kept from ``pairs`` is
+    materialized."""
+    leaves = pairs._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        if leaves.apply(i).nodeName() == "LogicalRDD":
+            leaves.apply(i).rdd().unpersist(False)
+
+
 # ------------------------------------------------------------------- minhash
 
 
@@ -250,25 +332,19 @@ def lsh_candidate_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     id_col: str = "doc_id",
-    max_bucket: int = 1000,
-    _caches: list | None = None,
+    max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
     """Band the signature, bucket-join, emit candidate (a, b) pairs once.
 
     rows_per_band = num_hashes // bands; a pair collides when all rows of any
     band match — the classic (r, b) S-curve. Buckets larger than
-    ``max_bucket`` are dropped (boilerplate/empty-doc clusters) to bound the
-    in-bucket quadratic join.
+    ``max_bucket`` produce no pairs (boilerplate/empty-doc clusters), which
+    bounds the in-bucket quadratic join.
 
-    Cache lifecycle: two intermediates are persisted (see comments below).
-    By default (``_caches=None``) the pair set is eagerly materialized
-    (``localCheckpoint``) and both caches are released before returning, so
-    a bare call never leaks persisted partitions into a long-lived session.
-    Composing callers that want to keep the plan lazy (e.g.
-    ``minhash_dedup``, which feeds the pairs into a Jaccard re-join while
-    the signature cache is still hot) pass ``_caches`` (a list) to receive
-    the cached DataFrames and MUST unpersist them after materializing
-    whatever they derive from the pairs.
+    The signature cache is released before returning. The returned pairs
+    are lazy and hold ``_bucket_pairs``' checkpoint of the banded rows
+    (``bands`` × N ``(id, band, bucket)`` rows), the one persisted RDD a
+    bare call leaves behind; ``minhash_dedup`` releases it.
     """
     r = num_hashes // bands
     # Materialize (id, minhash) BEFORE banding: the band/bucket expressions
@@ -277,55 +353,15 @@ def lsh_candidate_pairs(
     # reference (codegen subexpression elimination does not span the
     # struct-array construction) — measured 6× blowup at sf0.1. The cache
     # stores 8 B × num_hashes per doc and cuts the signature to exactly
-    # one evaluation per row; the banded rows below are persisted too so
-    # the bucket-size window and both self-join sides share one pass.
+    # one evaluation per row; it is no longer read once the banded rows
+    # are checkpointed.
     with_sig = with_sig.select(id_col, "minhash").persist()
-    if _caches is not None:
-        _caches.append(with_sig)
-    banded = with_sig.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",", *[F.col("minhash")[b * r + j] for j in range(r)]
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-    sized = (
-        banded.withColumn(
-            "_n", F.count("*").over(Window.partitionBy("band", "bucket"))
-        )
-        .filter(F.col("_n") <= max_bucket)
-        .persist()
-    )
-    if _caches is not None:
-        _caches.append(sized)
-    a = sized.alias("a")
-    b = sized.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    if _caches is None:
-        # own the caches: materialize the (small) pair set, release both
-        pairs = pairs.localCheckpoint(eager=True)
-        with_sig.unpersist()
-        sized.unpersist()
+    buckets = [
+        F.xxhash64(F.concat_ws(",", *[F.col("minhash")[b * r + j] for j in range(r)]))
+        for b in range(bands)
+    ]
+    pairs = _bucket_pairs(with_sig, id_col, buckets, max_bucket).distinct()
+    with_sig.unpersist()
     return pairs
 
 
@@ -377,19 +413,17 @@ def minhash_dedup(
     if 0 < n_files < sc.defaultParallelism:
         documents = documents.repartition(sc.defaultParallelism)
     sig = with_minhash(documents, text_col, num_hashes, shingle_n)
-    caches: list[DataFrame] = []
-    cands = lsh_candidate_pairs(sig, num_hashes, bands, _caches=caches)
+    cands = lsh_candidate_pairs(sig, num_hashes, bands)
     dups = (
         jaccard_pairs(documents, cands, text_col, shingle_n)
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
-        # eager-materialize the (small) drop-set so the LSH caches can be
-        # released before this function returns
+        # eager-materialize the (small) drop set so the bucket checkpoint
+        # can be released before this function returns
         .localCheckpoint(eager=True)
     )
-    for c in caches:
-        c.unpersist()
+    _release(cands)
     return documents.join(dups, "doc_id", "left_anti")
 
 
@@ -435,40 +469,34 @@ def with_simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_dup_pairs(with_fp: DataFrame, id_col: str = "doc_id", bands: int = 4) -> DataFrame:
     """Pairs with hamming distance < bands: by pigeonhole, at least one of
     ``bands`` 16-bit slices is identical — bucket-join on slices, verify with
-    JVM-side bit_count(xor) < bands."""
+    JVM-side bit_count(xor) < bands.
+
+    Rows whose whole fingerprint is shared by more than ``MAX_BUCKET`` rows
+    (empty or boilerplate texts: every empty text fingerprints to 0)
+    produce no pairs. The slice buckets themselves are not capped: at N
+    rows a slice bucket holds about N / 2^(64 // bands) rows from ordinary
+    traffic alone (≈ 1000 at 65M rows with 4 bands), and dropping those
+    buckets would silently lose genuine near-duplicates. The price is that
+    the candidate join grows as N² / 2^(64 // bands) per band — billions of
+    candidate pairs past ~10^7 rows at 4 bands, where MinHash-LSH is the
+    strategy to use. The returned pairs are lazy and hold the checkpoint of
+    the sliced rows (``bands`` × N rows)."""
+    # only (id, fingerprint) travel through the window's shuffle
+    rows = with_fp.select(id_col, "simhash")
+    rows = rows.withColumn("_n", F.count("*").over(Window.partitionBy("simhash")))
+    rows = rows.filter(F.col("_n") <= MAX_BUCKET)
     width = 64 // bands
     mask = (1 << width) - 1
-    sliced = with_fp.select(
-        F.col(id_col).alias("_id"),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("simhash", b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "simhash", "bb.band", "bb.bucket")
-    a, b = sliced.alias("a"), sliced.alias("b")
+    buckets = [
+        F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
+        for b in range(bands)
+    ]
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
+        _bucket_pairs(rows, id_col, buckets, None, carry=("simhash",))
         .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") < bands)
         .distinct()

@@ -13,15 +13,22 @@
   ``n_probe`` nearest lists. No KMeans dependency; same plumbing as a real
   IVF index.
 
-Embedding near-duplicate detection composes the same primitives (bucket →
-in-bucket pair cosine ≥ threshold).
+Embedding near-duplicate detection (one hyperplane-sign bucket per vector)
+and SemDeDup (one IVF list per vector) draw their candidate pairs from
+``dedup._bucket_pairs``, the generator behind every near-dup strategy,
+then verify by exact cosine ≥ threshold. Buckets or lists above the
+caller's cap (``max_bucket`` / ``max_list``) produce no pairs. Both
+materialize their small result (the verified pairs / the drop set) and
+release the generator's checkpoint, which holds a copy of every vector.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from circus_train_spark.pipeline.dedup import _bucket_pairs, _release
 
 
 def _lit_array(vec: list[float]) -> Column:
@@ -139,26 +146,16 @@ def embedding_near_dup_pairs(
         return embeddings.sparkSession.createDataFrame(
             [], "id_a long, id_b long, sim double"
         )
-    dim = len(first[0])
-    indexed = with_lsh_bucket(embeddings, dim, n_planes, seed, vec_col).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), "bucket"
-    )
-    sized = indexed.withColumn(
-        "_n", F.count("*").over(Window.partitionBy("bucket"))
-    ).filter(F.col("_n") <= max_bucket)
-    a, b = sized.alias("a"), sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.round(cosine(F.col("a._v"), F.col("b._v")), 8).alias("sim"),
-        )
+    planes = hyperplanes(len(first[0]), n_planes, seed)
+    rows = embeddings.select(F.col(id_col), F.col(vec_col).alias("v"))
+    pairs = (
+        _bucket_pairs(rows, id_col, [bucket_expr(F.col("v"), planes)], max_bucket, carry=("v",))
+        .select("id_a", "id_b", F.round(cosine(F.col("v_a"), F.col("v_b")), 8).alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
+    verified = pairs.localCheckpoint(eager=True)
+    _release(pairs)
+    return verified
 
 
 # ----------------------------------------------------------------- IVF-style
@@ -333,24 +330,16 @@ def semantic_dedup(
         ]
     )
     assigned = embeddings.withColumn("_sd_list", F.array_max(assign)["lid"])
-    sized = assigned.withColumn(
-        "_sd_n", F.count(F.lit(1)).over(Window.partitionBy("_sd_list"))
-    )
-    small = sized.filter(F.col("_sd_n") <= max_list)
-    a = small.select(
-        F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"), "_sd_list"
-    )
-    b = small.select(
-        F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"), "_sd_list"
-    )
+    rows = assigned.select(F.col(id_col), F.col(vec_col).alias("v"), "_sd_list")
+    pairs = _bucket_pairs(rows, id_col, [F.col("_sd_list")], max_list, carry=("v",))
     drops = (
-        a.join(b, "_sd_list")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .filter(F.round(cosine(F.col("_va"), F.col("_vb")), 8) >= threshold)
-        .select(F.col("_idb").alias(id_col))
+        pairs.filter(F.round(cosine(F.col("v_a"), F.col("v_b")), 8) >= threshold)
+        .select(F.col("id_b").alias(id_col))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    kept = assigned.join(drops, id_col, "left_anti").drop("_sd_n")
+    _release(pairs)
+    kept = assigned.join(drops, id_col, "left_anti")
     if list_col:
         return kept.withColumnRenamed("_sd_list", list_col)
     return kept.drop("_sd_list")

@@ -429,23 +429,88 @@ class TestTemperatureMixture:
 
 def test_lsh_candidate_pairs_releases_caches_by_default(spark, docs):
     """A bare lsh_candidate_pairs call must not leak persisted partitions:
-    it eagerly materializes the pair set and unpersists its two internal
-    caches before returning (composing callers opt out via _caches)."""
+    it releases its signature cache once the bucket rows are checkpointed,
+    leaving at most that checkpoint behind the returned pairs."""
     sc = spark.sparkContext
     sig = dedup.with_minhash(docs.limit(200))
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=32, bands=16)
     pairs.count()
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    # at most the localCheckpoint RDD backing the returned pairs survives;
-    # the two internal caches must be gone
     assert len(after - before) <= 1
-    # and parity with the composing (lazy, caller-owned) path
-    caches: list = []
-    lazy = dedup.lsh_candidate_pairs(sig, num_hashes=32, bands=16, _caches=caches)
-    assert sorted(map(tuple, pairs.collect())) == sorted(map(tuple, lazy.collect()))
-    for c in caches:
-        c.unpersist()
+
+
+def test_bucket_pairs_cap_is_inclusive(spark):
+    """A bucket of exactly max_bucket rows yields each of its C(n,2) pairs
+    once; one row more and the bucket yields none. The pairing is an
+    equi-join on the bucket, never a cartesian product."""
+    rows = spark.createDataFrame(
+        [(i, "full") for i in range(4)] + [(10 + i, "over") for i in range(5)],
+        "id long, k string",
+    )
+    pairs = dedup._bucket_pairs(rows, "id", [F.col("k")], max_bucket=4)
+    got = sorted(tuple(r) for r in pairs.collect())
+    assert got == [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
+
+
+def test_bucket_pairs_multi_band_and_carry(spark):
+    """A pair colliding in every band is emitted once per band, once after
+    distinct; carried columns come out as <col>_a / <col>_b."""
+    rows = spark.createDataFrame(
+        [(1, 7, 8, "x"), (2, 7, 8, "y"), (3, 7, 9, "z")],
+        "id long, b0 long, b1 long, tag string",
+    )
+    pairs = dedup._bucket_pairs(
+        rows, "id", [F.col("b0"), F.col("b1")], max_bucket=10, carry=("tag",)
+    )
+    assert pairs.columns == ["id_a", "id_b", "tag_a", "tag_b"]
+    got = sorted(tuple(r) for r in pairs.collect())
+    assert got == [(1, 2, "x", "y"), (1, 2, "x", "y"), (1, 3, "x", "z"), (2, 3, "y", "z")]
+    assert sorted(tuple(r) for r in pairs.distinct().collect()) == sorted(set(got))
+
+
+def test_simhash_dup_pairs_drops_over_cap_bucket(spark, monkeypatch):
+    """A fingerprint shared by more than MAX_BUCKET rows (the empty-text
+    case) pairs with nobody, while distinct fingerprints still pair when
+    every slice they share is crowded past MAX_BUCKET: the cap is on whole
+    fingerprints, not on slice buckets."""
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 3)
+    zeros = [(i, 0) for i in range(4)]
+    # all share slices 0, 2 and 3 (all zero bits); only slice 1 differs
+    crowd = [(100 + i, i << 16) for i in (1, 2, 3, 4, 100, 101)]
+    df = spark.createDataFrame(zeros + crowd, "doc_id long, simhash long")
+    got = sorted(tuple(r) for r in dedup.simhash_dup_pairs(df, bands=4).collect())
+    want = sorted(
+        (a, b, bin(fa ^ fb).count("1"))
+        for a, fa in crowd
+        for b, fb in crowd
+        if a < b and bin(fa ^ fb).count("1") < 4
+    )
+    assert got == want and (200, 201, 1) in got
+
+
+def test_dedup_operators_release_bucket_checkpoint(spark, docs, embs):
+    """minhash_dedup, embedding_near_dup_pairs and semantic_dedup return a
+    plan over their materialized drop set / verified pairs, so a later
+    action re-runs no bucket join, and they leave at most that one
+    checkpoint persisted: the generator's, which holds every signature or
+    vector, is released."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    for run, joins in (
+        (lambda: dedup.minhash_dedup(docs.limit(200), threshold=0.5, bands=16), 1),
+        (lambda: similarity.embedding_near_dup_pairs(embs, threshold=0.9, n_planes=4), 0),
+        (lambda: similarity.semantic_dedup(embs, threshold=0.9, n_lists=4), 1),
+    ):
+        before = persisted()
+        out = run()
+        assert len(persisted() - before) <= 1
+        assert out._jdf.queryExecution().optimizedPlan().toString().count("Join ") == joins
 
 
 def test_epoch_shuffle_deterministic_and_bijective(spark, docs):

@@ -103,12 +103,14 @@ def test_salted_join_equals_plain_join_property(spark, left, right, n_salts):
 
 # --------------------------------------------------------- hql translation
 #
-# translate_hql is sequential textual substitution (by design — parity with
-# the reference's HqlTranslator replaceAll chain), so general idempotence
-# only holds when replacements cannot re-introduce a source form. These
-# properties construct that regime explicitly: source names carry a 'z'
-# that is excluded from every fragment and destination tail, so each
-# injected occurrence is a complete form and nothing else can match.
+# translate_hql rewrites the reference's four forms on whole identifiers,
+# so idempotence only holds when replacements cannot re-introduce a source
+# form. These properties construct that regime explicitly: source names
+# carry a 'z' that is excluded from every fragment and destination tail,
+# so each injected occurrence is a complete form and nothing else can
+# match; a space sets each unescaped form apart from its neighbouring
+# fragments, and the same forms glued inside a longer identifier are left
+# alone.
 
 _ZFREE_FRAG = st.text(
     alphabet=st.characters(
@@ -129,15 +131,18 @@ def test_translate_hql_exact_rewrite_and_idempotence(frags, names):
     a, b, c, d = names
     db, tbl, ddb, dtbl = f"z{a}", f"z{b}", f"r_{c}", f"w_{d}"
     text = (
-        frags[0] + f"{db}.{tbl}" + frags[1] + f"{tbl}." + frags[2]
+        frags[0] + f" {db}.{tbl} " + frags[1] + f" {tbl}." + frags[2]
         + f"`{db}`.`{tbl}`" + frags[3] + f"`{tbl}`." + frags[4]
     )
     mapping = {f"{db}.{tbl}": f"{ddb}.{dtbl}"}
     once = translate_hql(text, mapping)
     assert once == (
-        frags[0] + f"{ddb}.{dtbl}" + frags[1] + f"{dtbl}." + frags[2]
+        frags[0] + f" {ddb}.{dtbl} " + frags[1] + f" {dtbl}." + frags[2]
         + f"`{ddb}`.`{dtbl}`" + frags[3] + f"`{dtbl}`." + frags[4]
     )
+    # inside a longer identifier the unescaped forms are not table names
+    glued = f"x{db}.{tbl}y x{tbl}."
+    assert translate_hql(glued, mapping) == glued
     # fixed point: a second pass finds nothing left to rewrite
     assert translate_hql(once, mapping) == once
     # identity mapping never changes any text

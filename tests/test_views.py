@@ -16,7 +16,7 @@ from pyspark.sql.utils import AnalysisException
 from circus_train_spark.functions.hql import translate_hql
 from circus_train_spark.meta.catalog import TokenTable
 from circus_train_spark.operators.replicate import replicate
-from circus_train_spark.operators.views import run_view, translate_views
+from circus_train_spark.operators.views import bind_sql, run_view, translate_views
 
 
 # ------------------------------------------------------- translator parity
@@ -72,6 +72,22 @@ def test_translate_requires_qualified_names():
     assert got == "SELECT b0.x FROM b0"
 
 
+
+def test_translate_hql_whole_identifiers_one_pass():
+    """A mapped name is never rewritten inside a longer identifier (the
+    replica path had ``db.tok2`` -> ``r.a2``), and a replacement is never
+    re-scanned by a later mapping."""
+    got = translate_hql(
+        "SELECT tok2.x, `tok`.y FROM db.tok2 JOIN DB.TOK ON tok.id = tok2.id"
+        " JOIN `db`.`tok2` JOIN mydb.tok",
+        {"db.tok": "r.a", "db.tok2": "r.b"},
+    )
+    assert got == (
+        "SELECT b.x, `a`.y FROM r.b JOIN r.a ON a.id = b.id"
+        " JOIN `r`.`b` JOIN mydb.tok"
+    )
+    assert translate_hql("FROM a.t", {"a.t": "b.u", "b.u": "c.v"}) == "FROM b.u"
+
 # ---------------------------------------------------- lifecycle + execution
 
 
@@ -109,6 +125,21 @@ def test_view_snapshot_pinned(spark, tmp_path, tokens_df):
     t.create_view("v", "SELECT 1 AS one")
     assert t.views()[ "v"] == "SELECT 1 AS one"
     assert t.views(s1)["v"] == "SELECT count(*) AS n FROM db.tokens"
+
+
+def test_bind_sql_prefix_names_resolve_to_their_own_tables(spark):
+    """Binding ``db.tok`` and ``db.tok2`` together: neither name, in any of
+    the four forms, is rewritten inside the other."""
+    bound, _ = bind_sql(
+        "SELECT max(tok2.id) AS hi, count(tok.id) AS n"
+        " FROM db.tok2 LEFT JOIN DB.TOK ON tok.id = tok2.id"
+        " WHERE `db`.`tok2`.id >= 0 AND coalesce(`tok`.id, 0) >= 0",
+        {"db.tok": spark.range(3), "db.tok2": spark.range(5)},
+    )
+    row = spark.sql(bound).collect()[0]
+    assert (row["hi"], row["n"]) == (4, 3)
+    with pytest.raises(ValueError):
+        bind_sql("SELECT 1", {"tok": spark.range(1)})
 
 
 # ----------------------------------------------------- replication travel
