@@ -1100,10 +1100,12 @@ def q_dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from circus_train_spark.pipeline.text import bpe_ish_token_count, ws_token_count
+
     d = _read(spark, sf_dir, "documents")
     t = F.trim(F.col("text"))
-    ws = F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-    bpe = F.regexp_count(F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
+    ws = ws_token_count(F.col("text"))
+    bpe = bpe_ish_token_count(F.col("text"))
     sym = F.length(F.regexp_replace(F.col("text"), r"[A-Za-z0-9\s]", ""))
     toks = F.split(F.lower(t), r"\s+")
     stops = ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"]
@@ -1117,29 +1119,11 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LANG_MARKERS = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
-    "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "mit", "den", "von"],
-    "fr": ["le", "la", "les", "et", "des", "est", "une", "dans", "que", "pour"],
-    "es": ["el", "la", "los", "las", "que", "de", "en", "una", "por", "con"],
-}
-
-
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from circus_train_spark.pipeline.text import lang_id
+
     d = _read(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    pairs = F.array(
-        *[
-            F.struct(
-                F.size(F.filter(toks, lambda x: x.isin(m))).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang, m in _LANG_MARKERS.items()
-        ]
-    )
-    best = F.array_max(pairs)
-    pred = F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-    return d.select("doc_id", "lang", pred.alias("lang_pred"))
+    return d.select("doc_id", "lang", lang_id(F.col("text")).alias("lang_pred"))
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,6 +37,15 @@ def _json(obj) -> None:
     print(json.dumps(obj, default=str))
 
 
+def _pair(text: str) -> tuple[str, str]:
+    """``KEY=VALUE`` -> ``(KEY, VALUE)``; argparse reports anything else
+    as a usage error naming the bad value."""
+    key, sep, value = text.partition("=")
+    if not sep:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="circus_train_spark")
     p.add_argument("--master", default=None, help="spark master (default: env/local[*])")
@@ -124,6 +133,7 @@ def main(argv: list[str] | None = None) -> int:
         "--table-mapping",
         action="append",
         default=None,
+        type=_pair,
         metavar="src_db.src_tbl=dst_db.dst_tbl",
         help="rewrite this table reference inside replicated view text "
         "(repeatable; the hive-view HqlTranslator analogue)",
@@ -194,6 +204,7 @@ def main(argv: list[str] | None = None) -> int:
         "--set",
         required=True,
         nargs="+",
+        type=_pair,
         metavar="COL=EXPR",
         help="assignments, e.g. source=upper(source)",
     )
@@ -384,10 +395,7 @@ def main(argv: list[str] | None = None) -> int:
                 partition_filter=pf,
                 partition_limit=a.partition_limit,
                 propagate_deletes=a.propagate_deletes,
-                table_mappings=dict(
-                    m.split("=", 1) for m in (a.table_mapping or [])
-                )
-                or None,
+                table_mappings=dict(a.table_mapping or []) or None,
             )
         )
         return 0
@@ -458,8 +466,7 @@ def main(argv: list[str] | None = None) -> int:
         from circus_train_spark.operators.delete import update_where
 
         t = TokenTable.load(spark, a.table)
-        assignments = dict(s.split("=", 1) for s in getattr(a, "set"))
-        _json(update_where(t, a.where, assignments, mode=a.mode))
+        _json(update_where(t, a.where, dict(getattr(a, "set")), mode=a.mode))
         return 0
 
     if a.cmd == "rollback":

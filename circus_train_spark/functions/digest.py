@@ -46,12 +46,3 @@ def table_digest(df: DataFrame, *cols: str) -> dict:
         "xor_digest": row["xor_digest"],
         "sum_digest": int(row["sum_digest"]) if row["sum_digest"] is not None else None,
     }
-
-
-def per_file_digest(df_with_file: DataFrame, file_col: str = "_file") -> DataFrame:
-    """Digest per input file; input must carry F.input_file_name() as file_col."""
-    return (
-        df_with_file.withColumn("_h", row_hash())
-        .groupBy(file_col)
-        .agg(*digest_agg())
-    )

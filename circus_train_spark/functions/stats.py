@@ -64,7 +64,7 @@ def _stats_fn(pdf: pd.DataFrame) -> pd.DataFrame:
 def per_file_stats(spark_df_with_file: DataFrame, zkey: bool = False) -> DataFrame:
     """Compute per-file stats rows in ONE distributed aggregation.
 
-    Input must carry ``_file`` (from ``F.input_file_name()``) and the
+    Input must carry ``_file`` (the catalog's ``file_tag()``) and the
     per-row content hash ``_h`` — either the persisted hidden column
     (narrow stats read, no token decode) or a freshly computed
     ``row_hash()``. Output: one row per file (FILE_STATS_SCHEMA) including

@@ -26,6 +26,17 @@ Key properties:
 - **snapshot isolation**: readers resolve a snapshot id once and only ever
   read files listed by that snapshot; commits swap an atomic pointer
   (see ``snapshot.py``).
+- **one reader**: every read of a snapshot's rows goes through
+  ``TokenTable.read_files`` — the scan, the fast digest's hash-only read,
+  compaction's rewrite read (data plus hidden columns) and the
+  DELETE/MERGE probes differ only in the schema and tags they ask for —
+  so every reader suppresses the same pending merge-on-read deletes.
+  Only the physical audits (per-file stats, ``validate``) read files
+  directly.
+- **one file tag**: "which file did this row come from" is answered by
+  ``file_tag()`` alone — the normalised ``_metadata.file_path``, a plain
+  path equal to the manifest's ``file_path``. It is deterministic, so
+  predicates above a tagged read still push down into the parquet scan.
 
 Scale notes (designed for ~10^12 rows / ~10^6 files):
 - manifests are Parquet and are *read* distributed (``spark.read.parquet``);
@@ -43,11 +54,13 @@ import os
 import shutil
 import uuid
 from collections.abc import Iterable
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta import schema as S
@@ -101,12 +114,30 @@ _ARROW_DELETE_MANIFEST_SCHEMA = pa.schema(
 )
 
 
-def _strip_uri(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
+def file_tag() -> Column:
+    """The data file a row was read from, as the plain path that manifest
+    entries and positional delete files store. Apply it directly on a
+    single parquet read (before any union or join). Unlike Spark's
+    nondeterministic input-file-name function it lets filters above it
+    push down into the parquet scan."""
+    return F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+
+
+# Snapshot state that rides with every commit: a key the commit's own
+# summary does not set is copied from the snapshot it builds on, so expiry
+# never strands the evolved schema and no commit path drops artifacts,
+# views or pending merge-on-read deletes.
+_CARRIED_STATE = ("schema", "artifacts", "views", "delete_manifests")
+
+
+def carry_state(base: Snapshot, summary: dict) -> dict:
+    """``summary`` plus every carried key it does not set itself, taken
+    from ``base``. A key set explicitly (even to an empty value, as a view
+    drop does) wins."""
+    for key in _CARRIED_STATE:
+        if key not in summary and base.summary.get(key):
+            summary[key] = base.summary[key]
+    return summary
 
 
 class TokenTable:
@@ -461,32 +492,23 @@ class TokenTable:
 
     def _delete_groups(
         self, paths: list[str], snapshot_id: int | None
-    ) -> "tuple[list[str], list[tuple[list[str], list[str], list[str]]]] | None":
-        """Group scanned data files by the EXACT set of pending delete key
-        files that target them. Returns ``None`` when nothing is targeted,
-        else ``(clean_paths, [(paths, eq_key_files, pos_key_files), ...])``.
+    ) -> list[tuple[list[str], list[str], list[str]]]:
+        """Group data files by the EXACT set of pending delete key files
+        that target them: ``[(paths, eq_key_files, pos_key_files), ...]``,
+        the untargeted files last as one clean group with no key files
+        (the only group when nothing is targeted).
 
         Grouping per applicable-entry-set (not one lump of all targeted
         files vs all keys) keeps each entry's keys scoped to its own target
         files: a key deleted by entry A must never suppress a same-key row
         that a later MERGE re-inserted into a file only entry B targets."""
-        entries = self.delete_entries(snapshot_id)
-        if not entries:
-            return None
         pset = set(paths)
         eq_by_path: dict[str, set[str]] = {}
         pos_by_path: dict[str, set[str]] = {}
-        any_hit = False
-        for e in entries:
-            hit = pset.intersection(e["targets"])
-            if not hit:
-                continue
-            any_hit = True
+        for e in self.delete_entries(snapshot_id):
             d = pos_by_path if e.get("kind", "eq") == "pos" else eq_by_path
-            for p in hit:
+            for p in pset.intersection(e["targets"]):
                 d.setdefault(p, set()).add(e["file_path"])
-        if not any_hit:
-            return None
         clean: list[str] = []
         groups: dict[tuple, list[str]] = {}
         for p in paths:
@@ -494,14 +516,12 @@ class TokenTable:
                 tuple(sorted(eq_by_path.get(p, ()))),
                 tuple(sorted(pos_by_path.get(p, ()))),
             )
-            if not key[0] and not key[1]:
+            if key == ((), ()):
                 clean.append(p)
             else:
                 groups.setdefault(key, []).append(p)
-        return clean, [
-            (sorted(ps), list(k[0]), list(k[1]))
-            for k, ps in sorted(groups.items())
-        ]
+        out = [(sorted(ps), list(k[0]), list(k[1])) for k, ps in sorted(groups.items())]
+        return out + [(clean, [], [])] if clean else out
 
     def _read_group(
         self,
@@ -513,19 +533,23 @@ class TokenTable:
         pos_col: str | None = None,
     ) -> DataFrame:
         """Read one target-file group and suppress its pending MOR deletes:
-        positional keys anti-join on (normalized ``_metadata.file_path``,
-        ``_metadata.row_index``); equality keys anti-join on ``doc_id``.
-        Both key sides are broadcast (small by MOR construction). Surviving
-        rows keep their physical positions — ``pos_col`` stays meaningful
-        for stacking a second positional delete on a still-pending file."""
-        df = self.spark.read.schema(schema).parquet(*paths)
-        if file_col:
-            df = df.withColumn(file_col, F.input_file_name())
-        if pos_key_files or pos_col:
-            df = df.withColumn(
-                "_mor_fp",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
-            ).withColumn("_mor_rp", F.col("_metadata.row_index"))
+        positional keys anti-join on (file tag, ``_metadata.row_index``);
+        equality keys anti-join on ``doc_id``, which is read for the join
+        and dropped again when ``schema`` lacks it. Both key sides are
+        broadcast (small by MOR construction). Surviving rows keep their
+        physical positions — ``pos_col`` stays meaningful for stacking a
+        second positional delete on a still-pending file."""
+        read_schema = schema
+        if eq_key_files and "doc_id" not in schema.fieldNames():
+            read_schema = T.StructType(
+                [T.StructField("doc_id", T.StringType(), True)] + schema.fields
+            )
+        df = self.spark.read.schema(read_schema).parquet(*paths)
+        fp, rp = file_col or "_mor_fp", pos_col or "_mor_rp"
+        if file_col or pos_key_files:
+            df = df.withColumn(fp, file_tag())
+        if pos_col or pos_key_files:
+            df = df.withColumn(rp, F.col("_metadata.row_index"))
         if pos_key_files:
             pos = self.spark.read.parquet(*pos_key_files).select(
                 F.col("file_path").alias("_del_fp"),
@@ -533,84 +557,46 @@ class TokenTable:
             )
             df = df.join(
                 F.broadcast(pos),
-                (F.col("_mor_fp") == F.col("_del_fp"))
-                & (F.col("_mor_rp") == F.col("_del_rp")),
+                (F.col(fp) == F.col("_del_fp")) & (F.col(rp) == F.col("_del_rp")),
                 "left_anti",
             )
         if eq_key_files:
             keys = self.spark.read.parquet(*eq_key_files).select("doc_id")
             df = df.join(F.broadcast(keys), "doc_id", "left_anti")
-        if pos_col:
-            df = df.withColumnRenamed("_mor_rp", pos_col).drop("_mor_fp")
-        elif pos_key_files:
-            df = df.drop("_mor_fp", "_mor_rp")
-        return df
+        extra = [c for c in ("_mor_fp", "_mor_rp") if c in df.columns]
+        if read_schema is not schema:
+            extra.append("doc_id")
+        return df.drop(*extra)
 
-    def _apply_deletes(
-        self, df: DataFrame, paths: list[str], snapshot_id: int | None
-    ) -> DataFrame:
-        """No-op unless some scanned file is targeted by a pending delete.
-        Targeted files are re-read per target-group, anti-joined against the
-        (small, broadcast) applicable delete keys — equality keys on
-        ``doc_id``, positional keys on (file, row position) — and unioned
-        with the untargeted remainder; deleted keys never suppress
-        re-inserted rows because those live in untargeted files."""
-        split = self._delete_groups(paths, snapshot_id)
-        if split is None:
-            return df
-        clean, groups = split
-        schema = df.schema
-        parts = [
-            self._read_group(schema, ps, eq, pos) for ps, eq, pos in groups
-        ]
-        if clean:
-            parts.append(self.spark.read.schema(schema).parquet(*clean))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def scan_tagged(
+    def read_files(
         self,
-        files: list[str],
+        paths: list[str],
+        schema=None,
         snapshot_id: int | None = None,
-        file_col: str = "_file",
+        file_col: str | None = None,
         pos_col: str | None = None,
     ) -> DataFrame:
-        """``scan(files=...)`` plus the physical file each row came from,
-        with pending MOR deletes applied. ``input_file_name()`` cannot span
-        a union/join of sources, so the tag is attached per single-source
-        read *before* deletes are anti-joined — this is what DELETE/MERGE
-        classification probes use. Pass ``pos_col`` to additionally tag each
-        row with its physical position inside its file
-        (``_metadata.row_index``) — what positional delete files record."""
-        schema = self.data_schema(snapshot_id)
-        if not files:
-            import pyspark.sql.types as T
-
-            extra = [T.StructField(file_col, T.StringType())]
+        """The one data reader: ``paths`` read with ``schema`` (default: the
+        snapshot's data schema; old files reconcile against it — missing
+        columns -> null, int->long / float->double widened) and the
+        snapshot's pending MOR deletes suppressed, each pending key scoped
+        to the files its entry targets. ``file_col`` tags every row with
+        the data file it came from (``file_tag``: the plain path manifests
+        and positional delete files store); ``pos_col`` with its physical
+        row position inside that file (``_metadata.row_index``). Both tags
+        are attached per single-source read, before any anti-join."""
+        if schema is None:
+            schema = self.data_schema(snapshot_id)
+        if not paths:
+            extra = [T.StructField(file_col, T.StringType())] if file_col else []
             if pos_col:
                 extra.append(T.StructField(pos_col, T.LongType()))
-            return self.spark.createDataFrame(
-                [], T.StructType(schema.fields + extra)
-            )
-        split = self._delete_groups(files, snapshot_id)
-        if split is None:
-            clean, groups = list(files), []
-        else:
-            clean, groups = split
+            return self.spark.createDataFrame([], T.StructType(schema.fields + extra))
         parts = [
             self._read_group(schema, ps, eq, pos, file_col=file_col, pos_col=pos_col)
-            for ps, eq, pos in groups
+            for ps, eq, pos in self._delete_groups(paths, snapshot_id)
         ]
-        if clean:
-            parts.append(
-                self._read_group(schema, clean, [], [], file_col=file_col, pos_col=pos_col)
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return reduce(DataFrame.unionByName, parts)
 
     # ---------------------------------------------------------------- scans
     def select_partitions(
@@ -699,16 +685,7 @@ class TokenTable:
             if files is not None
             else self.file_paths(snapshot_id, partitions, doc_id_range, n_tok_range)
         )
-        schema = self.data_schema(snapshot_id)
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        # old files reconcile against the current schema in the reader:
-        # missing columns -> null, int->long / float->double widened,
-        # removed columns pruned (see meta.schema.check_evolution)
-        df = self.spark.read.schema(schema).parquet(*paths)
-        # merge-on-read: anti-join pending equality-delete keys against the
-        # files they target (no-op when no delete files are live)
-        return self._apply_deletes(df, paths, snapshot_id)
+        return self.read_files(paths, snapshot_id=snapshot_id)
 
     # --------------------------------------------------------------- writes
     def _stage_dir(self, event_id: str) -> str:
@@ -829,9 +806,7 @@ class TokenTable:
             return []
         schema = S.STATS_READ_SCHEMA_Z if zkey else S.STATS_READ_SCHEMA
         read = (
-            self.spark.read.schema(schema)
-            .parquet(*files)
-            .withColumn("_file", F.input_file_name())
+            self.spark.read.schema(schema).parquet(*files).withColumn("_file", file_tag())
         )
         rows = per_file_stats(read, zkey=zkey).collect()
         if any(r["xor_digest"] is None and r["n_rows"] > 0 for r in rows):
@@ -840,17 +815,16 @@ class TokenTable:
                 self.spark.read.schema(S.DATA_SCHEMA)
                 .parquet(*files)
                 .withColumn("_h", row_hash())
-                .withColumn("_file", F.input_file_name())
+                .withColumn("_file", file_tag())
             )
             rows = per_file_stats(read).collect()
         entries = []
         for r in rows:
-            p = _strip_uri(r["file_path"])
             entries.append(
                 {
-                    "file_path": p,
+                    "file_path": r["file_path"],
                     "partition": r["partition"],
-                    "file_size": os.path.getsize(p),
+                    "file_size": os.path.getsize(r["file_path"]),
                     "n_rows": r["n_rows"],
                     "min_doc_id": r["min_doc_id"],
                     "max_doc_id": r["max_doc_id"],
@@ -1016,10 +990,10 @@ class TokenTable:
                 e["added_snapshot_id"] = new_sid
             added_manifest = self.write_manifest(stamped)
             manifests.append(added_manifest)
-        summary = dict(summary or {})
-        # merge-on-read delete state: carry forward / shrink / purge / append
+        summary = carry_state(parent, dict(summary or {}))
+        # merge-on-read delete state: carried forward above; shrink / purge /
+        # append here
         parent_dms = list(parent.summary.get("delete_manifests", []))
-        delete_manifests = parent_dms
         if parent_dms or added_deletes:
             survivors: list[dict] = []
             changed = False
@@ -1034,34 +1008,16 @@ class TokenTable:
             for e in added_deletes or []:
                 changed = True
                 survivors.append({**e, "added_snapshot_id": new_sid})
-            if changed:
-                delete_manifests = (
-                    [self.write_delete_manifest(survivors)] if survivors else []
-                )
-        if delete_manifests:
-            summary["delete_manifests"] = delete_manifests
+            if changed and survivors:
+                summary["delete_manifests"] = [self.write_delete_manifest(survivors)]
+            elif changed:
+                summary.pop("delete_manifests", None)
         if stage_only:
             # record the delta so publish() can cherry-pick onto a moved head
             if added_manifest:
                 summary["wap_added_manifest"] = added_manifest
             if removed_paths:
                 summary["wap_removed_paths"] = sorted(removed_paths)
-        if "schema" not in summary:
-            # carry the schema forward so expiring old snapshots never
-            # loses the table's evolved schema
-            parent_schema = parent.summary.get("schema")
-            if parent_schema:
-                summary["schema"] = parent_schema
-        if "artifacts" not in summary:
-            # attached schema artifacts ride with every snapshot, same rule
-            parent_arts = parent.summary.get("artifacts")
-            if parent_arts:
-                summary["artifacts"] = parent_arts
-        if "views" not in summary:
-            # stored view definitions ride with every snapshot, same rule
-            parent_views = parent.summary.get("views")
-            if parent_views:
-                summary["views"] = parent_views
         summary.setdefault("added_files", len(added))
         summary.setdefault("removed_files", len(removed_paths))
         summary.setdefault("added_rows", sum(e["n_rows"] for e in added))
@@ -1174,42 +1130,18 @@ class TokenTable:
         the same single job (hash-count < row-count) and the digest falls
         back to a full recompute; both paths produce identical values since
         the persisted column IS row_hash()."""
-        from pyspark.sql import types as T
-
         from circus_train_spark.functions.digest import digest_agg, table_digest
 
         if fast:
             paths = self.file_paths(snapshot_id)
             if paths:
-                schema = T.StructType(
-                    [T.StructField(S.ROW_HASH_COL, T.LongType(), True)]
+                # pending MOR deletes need doc_id only for equality-keyed
+                # groups (read_files adds it there); still no token decode
+                hashes = self.read_files(
+                    paths,
+                    T.StructType([T.StructField(S.ROW_HASH_COL, T.LongType(), True)]),
+                    snapshot_id,
                 )
-                hashes = self.spark.read.schema(schema).parquet(*paths)
-                split = self._delete_groups(paths, snapshot_id)
-                if split is not None:
-                    # pending MOR deletes: targeted files contribute only
-                    # their surviving rows — re-read them per target-group
-                    # (doc_id added only for equality-keyed groups; a
-                    # positional group anti-joins on the hidden metadata
-                    # columns alone), still no token decode
-                    clean, groups = split
-                    two = T.StructType(
-                        [
-                            T.StructField("doc_id", T.StringType(), True),
-                            T.StructField(S.ROW_HASH_COL, T.LongType(), True),
-                        ]
-                    )
-                    parts = [
-                        self._read_group(
-                            two if eq else schema, ps, eq, pos
-                        ).select(S.ROW_HASH_COL)
-                        for ps, eq, pos in groups
-                    ]
-                    if clean:
-                        parts.append(self.spark.read.schema(schema).parquet(*clean))
-                    hashes = parts[0]
-                    for p in parts[1:]:
-                        hashes = hashes.unionByName(p)
                 row = (
                     hashes.agg(
                         F.count(S.ROW_HASH_COL).alias("n_hashed"),

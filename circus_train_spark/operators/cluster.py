@@ -130,11 +130,9 @@ def cluster(
         max_shard_bins, max(kb for per in shard_bins.values() for kb in per)
     )
     if q_fine > 1:
-        narrow = (
-            table.spark.read.schema(S.STATS_READ_SCHEMA)
-            .parquet(*in_files)
-            .select("doc_id", "n_tok", "source")
-        )
+        narrow = table.read_files(
+            in_files, S.STATS_READ_SCHEMA, base.snapshot_id
+        ).select("doc_id", "n_tok", "source")
         zn = with_zkey(narrow, source_codes, n_tok_min, n_tok_max, curve=curve)
         shard_expr = F.lit(0)
         for s in sources:

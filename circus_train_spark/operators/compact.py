@@ -115,32 +115,20 @@ def _rewrite_group(
     entry_by_path: dict[str, dict],
     event_id: str,
     snapshot_id: int | None = None,
+    delete_targets: frozenset[str] = frozenset(),
 ) -> tuple[FileGroup, list[dict], float]:
     """Read the group's files and write them back as one file. Runs in a
     driver worker thread; the heavy lifting is one single-task Spark job.
 
-    Files targeted by pending merge-on-read delete files (equality OR
-    positional) have their deleted keys anti-joined away during the rewrite
-    via the catalog's per-entry-scoped group reader (that is what *purges*
-    the delete files); untargeted group members are read verbatim so a
-    re-inserted key is never suppressed."""
+    The read goes through ``TokenTable.read_files``, so files targeted by
+    pending merge-on-read delete files (equality OR positional, each key
+    scoped to its own targets) lose their deleted rows during the rewrite
+    — that is what *purges* the delete files — while untargeted members
+    are read verbatim and a re-inserted key is never suppressed."""
     t0 = time.monotonic()
     out_dir = os.path.join(table.data_dir, event_id, f"g-{group.group_id}")
-    schema = _rewrite_schema(table)
-    split = table._delete_groups(list(group.files), snapshot_id)
-    targeted = split is not None
-    if targeted:
-        clean, dgroups = split
-        parts = [
-            table._read_group(schema, ps, eq, pos) for ps, eq, pos in dgroups
-        ]
-        if clean:
-            parts.append(table.spark.read.schema(schema).parquet(*clean))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-    else:
-        df = table.spark.read.schema(schema).parquet(*group.files)
+    targeted = not delete_targets.isdisjoint(group.files)
+    df = table.read_files(list(group.files), _rewrite_schema(table), snapshot_id)
     df = df.withColumn(S.WRITE_PART_COL, F.col("source"))
     from circus_train_spark.meta.writers import WriteRequest, writer_for
 
@@ -230,6 +218,7 @@ def compact(
                 entry_by_path,
                 event_id,
                 base.snapshot_id,
+                frozenset(delete_targets),
             )
             for g in todo
         ]

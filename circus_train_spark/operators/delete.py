@@ -7,10 +7,13 @@ touches the minimum set of bytes:
 1. **manifest pruning** — callers who know their predicate's bounds pass
    ``doc_id_range`` / ``n_tok_range`` and files outside the min/max stats
    never appear in the plan (same skip path as ``TokenTable.scan``).
-2. **classify job** — read surviving files with the predicate pushed into
-   the parquet scan (row-group stats skip non-matching groups before
-   decoding) and count matching rows per ``input_file_name()``. The
-   reduction is a per-file groupBy — parallel, metadata-sized output.
+2. **classify job** — read surviving files through
+   ``TokenTable.read_files`` (pending merge-on-read deletes suppressed,
+   every row tagged with its data file) and count matching rows per file.
+   The file tag is deterministic, so the predicate is pushed into the
+   parquet scan (row-group stats skip non-matching groups before
+   decoding). The reduction is a per-file groupBy — parallel,
+   metadata-sized output.
 3. **three-way split** per file against its manifest row count:
    - ``matched == 0``        → untouched (not even listed in the commit);
    - ``matched == n_rows``   → **dropped metadata-only** (DELETE only):
@@ -70,14 +73,6 @@ class UpdateResult:
     delete_files_written: int = 0  # merge-on-read: old versions suppressed
 
 
-def _strip(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[5:]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
 def _write_key_file(df, dest_path: str) -> int:
     """Write a (small) delete-key DataFrame to ONE parquet file with Spark —
     executor-side, no driver key materialization — and return its row count
@@ -118,13 +113,13 @@ def _classify(table: TokenTable, base, predicate: str, doc_id_range, n_tok_range
     matched: dict[str, int] = {}
     if paths:
         rows = (
-            table.scan_tagged(paths)
+            table.read_files(paths, file_col="_file")
             .filter(F.expr(predicate))
             .groupBy("_file")
             .agg(F.count(F.lit(1)).alias("m"))
             .collect()
         )
-        matched = {_strip(r["_file"]): r["m"] for r in rows}
+        matched = {r["_file"]: r["m"] for r in rows}
     return entries, paths, matched, n_pruned
 
 
@@ -207,13 +202,10 @@ def delete_where(
         key_path = os.path.join(key_dir, f"{kind}-delete-{event_id}.parquet")
         if positional:
             keys = (
-                table.scan_tagged(partial, file_col="_file", pos_col="_pos")
+                table.read_files(partial, file_col="_file", pos_col="_pos")
                 .filter(pred)
                 .select(
-                    F.regexp_replace(F.col("_file"), "^file:/+", "/").alias(
-                        "file_path"
-                    ),
-                    F.col("_pos").alias("row_pos"),
+                    F.col("_file").alias("file_path"), F.col("_pos").alias("row_pos")
                 )
             )
         else:

@@ -21,7 +21,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from circus_train_spark.ids import new_event_id
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, carry_state
 
 OP = "rewrite_manifests"
 
@@ -59,17 +59,18 @@ def rewrite_manifests(
         pq.write_table(chunk, path)
         new_paths.append(path)
 
-    summary = {
-        "manifests_before": len(base.manifests),
-        "manifests_after": len(new_paths),
-        "entries": n,
-    }
     # this op swaps the manifest list wholesale, so it commits through the
-    # log directly — but it must still carry the versioned schema forward
-    # (expiry could otherwise strand an evolved table without its schema)
-    # and notify commit listeners, like every other commit.
-    if "schema" in base.summary:
-        summary["schema"] = base.summary["schema"]
+    # log directly — but like every other commit it carries the snapshot
+    # state forward (schema, artifacts, views, pending MOR deletes) and
+    # notifies commit listeners.
+    summary = carry_state(
+        base,
+        {
+            "manifests_before": len(base.manifests),
+            "manifests_after": len(new_paths),
+            "entries": n,
+        },
+    )
     snap = table.log.commit(
         expected_parent_id=base.snapshot_id,
         event_id=new_event_id(),

@@ -13,7 +13,7 @@ Plan (all joins on ``doc_id``):
    before any data read (stats-based skip; works best after clustering).
 2. **touched-file probe** — read only the ``doc_id`` column of surviving
    files (column pruning to one string column), **left-semi join** against
-   the change keys, collect the distinct ``input_file_name()`` set. This is
+   the change keys, collect the distinct set of tagged source files. This is
    the reference's replica-side hash probe re-expressed distributed
    (``core/replica/Replica.java:177-204,290-296``).
 3. **copy-on-write rewrite** — read the touched files fully, **left-anti
@@ -219,7 +219,7 @@ def merge_into(
     matched_upserts = 0
     if candidates:
         probe = (
-            table.scan_tagged([e["file_path"] for e in candidates])
+            table.read_files([e["file_path"] for e in candidates], file_col="_file")
             .select("doc_id", "_file")
             .join(keyside(changes.select("doc_id", "_op")), "doc_id", "inner")
         )
@@ -233,7 +233,7 @@ def merge_into(
         ).collect()
         n_existing = sum(r["n"] for r in per_file)
         matched_upserts = sum(r["nu"] for r in per_file)
-        touched = sorted(_strip(r["_file"]) for r in per_file)
+        touched = sorted(r["_file"] for r in per_file)
 
     n_updated = matched_upserts
     n_inserted = n_upserts - matched_upserts
@@ -310,14 +310,6 @@ def merge_into(
         strategy=strategy,
         duration_s=time.monotonic() - t0,
     )
-
-
-def _strip(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
 
 
 # ------------------------------------------------------- conditional MERGE
@@ -445,7 +437,7 @@ def merge_conditional(
     touched: list[str] = []
     clause_rows = [0] * len(clauses)
     if cand_paths and matched_clauses:
-        probe_src = table.scan_tagged(cand_paths)
+        probe_src = table.read_files(cand_paths, file_col="_file")
         if probe_columns is not None:
             need = sorted({*probe_columns, "doc_id"})
             probe_src = probe_src.select(*need, "_file")
@@ -463,7 +455,7 @@ def merge_conditional(
             .collect()
         )
         for r in per_file:
-            touched.append(_strip(r["_file"]))
+            touched.append(r["_file"])
             for i, _ in matched_clauses:
                 clause_rows[i] += r[str(i)] or 0
         touched = sorted(touched)
@@ -504,7 +496,7 @@ def merge_conditional(
     n_inserted = 0
     if insert_clauses:
         matched_keys = (
-            table.scan_tagged(cand_paths).select("doc_id")
+            table.read_files(cand_paths).select("doc_id")
             if cand_paths
             else keys.limit(0)
         )

@@ -17,7 +17,7 @@ producing a table of dangling paths.
 from __future__ import annotations
 
 from circus_train_spark.ids import new_event_id
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, carry_state
 from circus_train_spark.meta.snapshot import Snapshot
 
 OP = "rollback"
@@ -37,9 +37,10 @@ def rollback(table: TokenTable, snapshot_id: int, run_id: str | None = None) -> 
         "rolled_back_to": snapshot_id,
         "rolled_back_from": head.snapshot_id,
     }
-    # restore the schema AS OF the target snapshot, not the head's
-    target_schema = table.data_schema(snapshot_id)
-    summary["schema"] = target_schema.json()
+    # restore the state AS OF the target snapshot, not the head's: its
+    # schema, artifacts, views and pending merge-on-read deletes
+    summary["schema"] = table.data_schema(snapshot_id).json()
+    carry_state(target, summary)
     snap = table.log.commit(
         expected_parent_id=head.snapshot_id,
         event_id=run_id or new_event_id(),

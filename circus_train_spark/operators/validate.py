@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from circus_train_spark.functions.digest import row_hash
 from circus_train_spark.meta import schema as S
-from circus_train_spark.meta.catalog import TokenTable
+from circus_train_spark.meta.catalog import TokenTable, file_tag
 
 
 @dataclass
@@ -56,14 +56,13 @@ def file_audit(table: TokenTable, snapshot_id: int | None = None) -> DataFrame:
         actual = (
             spark.read.schema(S.DATA_SCHEMA)
             .parquet(*present)
-            .withColumn("_file", F.input_file_name())
+            .withColumn("_file", file_tag())
             .withColumn("_h", row_hash())
             .groupBy("_file")
             .agg(
                 F.count(F.lit(1)).alias("d_rows"),
                 F.expr("bit_xor(_h)").alias("d_digest"),
             )
-            .withColumn("_file", F.regexp_replace("_file", "^file:/+", "/"))
         )
         joined = manifest.join(
             actual, manifest.file_path == actual._file, "left"

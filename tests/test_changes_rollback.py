@@ -97,3 +97,23 @@ def test_table_changes_pure_append(table, spark, tokens_df):
     feed = table_changes(t, base)
     assert feed.filter("_change = 'insert'").count() == 50
     assert feed.filter("_change = 'delete'").count() == 0
+
+
+def test_rollback_restores_pending_mor_deletes(table):
+    """Rolling back to a snapshot with pending merge-on-read deletes
+    restores its delete state along with its manifests, so the rolled-back
+    scan equals the target's scan."""
+    from circus_train_spark.operators.delete import delete_where
+
+    t = table
+    key = t.scan().orderBy("doc_id").first()["doc_id"]
+    delete_where(t, f"doc_id = '{key}'", mode="mor")
+    target = t.current_snapshot().snapshot_id
+    assert t.delete_manifests(target)
+    digest = t.table_digest(target)
+    compact(t, target_file_bytes=64 * 1024 * 1024, verify=False)
+    assert not t.delete_manifests()  # compaction applied and purged them
+    rollback(t, target)
+    assert t.delete_manifests() == t.delete_manifests(target)
+    assert t.table_digest() == digest
+    assert t.scan().filter(f"doc_id = '{key}'").count() == 0

@@ -408,3 +408,37 @@ def test_explicit_mor_update_broad_predicate_falls_back(table):
     assert table.scan().filter(
         "n_tok > 16 AND NOT source LIKE '%_u'"
     ).count() == 0
+
+
+def test_classify_read_pushes_predicate_into_parquet_scan(table):
+    """The DELETE/UPDATE classify read (``read_files`` tagged with the
+    source file) keeps the predicate pushable: every data-file scan in the
+    plan lists it in ``PushedFilters``, on clean and MOR-targeted groups
+    alike, and the per-file counts are unchanged by the pending delete."""
+    import re
+
+    def classify_plan():
+        df = table.read_files(table.file_paths(), file_col="_file").filter(
+            F.expr("n_tok < 20")
+        )
+        scans = [
+            line
+            for line in df._jdf.queryExecution().executedPlan().toString().splitlines()
+            if "FileScan parquet" in line and re.search(r"\bn_tok#", line)
+        ]
+        return df, scans
+
+    df, scans = classify_plan()
+    assert scans
+    for line in scans:
+        assert "PushedFilters: [IsNotNull(n_tok), LessThan(n_tok,20)]" in line
+    counts = {r["_file"]: r["count"] for r in df.groupBy("_file").count().collect()}
+    assert set(counts) <= set(table.file_paths())  # plain paths, no URI scheme
+
+    delete_where(table, "n_tok >= 20 AND n_tok % 97 = 0", mode="mor")
+    assert table.delete_manifests()
+    df, scans = classify_plan()
+    assert len(scans) >= 2  # targeted and clean groups
+    for line in scans:
+        assert "PushedFilters: [IsNotNull(n_tok), LessThan(n_tok,20)]" in line
+    assert {r["_file"]: r["count"] for r in df.groupBy("_file").count().collect()} == counts

@@ -87,3 +87,27 @@ def test_rewrite_manifests(spark, tmp_path, tokens_df):
     # noop when already compact enough
     res2 = rewrite_manifests(t, target_manifests=1)
     assert res2.snapshot_id is None
+
+
+def test_rewrite_manifests_keeps_snapshot_state(spark, tmp_path, tokens_df):
+    """The manifest rewrite commits straight through the snapshot log; it
+    must still carry every piece of snapshot state forward — pending MOR
+    deletes (else deleted rows reappear), views and artifacts."""
+    from circus_train_spark.operators.delete import delete_where
+
+    t = TokenTable.create(spark, str(tmp_path / "tbls"))
+    t.append(tokens_df.limit(1000), num_files=2)
+    t.append(tokens_df.filter("n_tok > 500").limit(500), num_files=2)
+    art = tmp_path / "schema.avsc"
+    art.write_text('{"type": "record"}')
+    t.attach_artifact(str(art))
+    t.create_view("long_docs", "SELECT doc_id FROM tok WHERE n_tok > 100")
+    key = t.scan().orderBy("doc_id").first()["doc_id"]
+    delete_where(t, f"doc_id = '{key}'", mode="mor")
+    before = (t.table_digest(), t.views(), t.artifacts(), t.delete_manifests())
+    assert before[3], "the delete must stay merge-on-read"
+
+    res = rewrite_manifests(t, target_manifests=1)
+    assert res.snapshot_id == t.current_snapshot().snapshot_id
+    assert (t.table_digest(), t.views(), t.artifacts(), t.delete_manifests()) == before
+    assert t.scan().filter(f"doc_id = '{key}'").count() == 0
