@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -140,11 +140,6 @@ def with_zkey(
     return df.withColumn(
         out_col, udf(F.xxhash64("doc_id"), F.col("n_tok"), F.col("source"))
     )
-
-
-def salt_column(n_salts: int) -> Column:
-    """Deterministic salt for skewed keys: pmod(xxhash64(doc_id), n)."""
-    return F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).alias("_salt")
 
 
 def make_zbin_udf(

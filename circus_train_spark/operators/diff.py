@@ -91,11 +91,6 @@ def changed_partitions(diff: DataFrame) -> list[str]:
     return sorted(r["partition"] for r in rows)
 
 
-def deleted_partitions(diff: DataFrame) -> list[str]:
-    rows = diff.filter(F.col("status") == STATUS_DELETED).collect()
-    return sorted(r["partition"] for r in rows)
-
-
 def render_comparison(source: TokenTable, replica: TokenTable) -> tuple[str, int]:
     """Human-readable difference report — the comparison tool's output
     surface (``circus-train-comparison-tool/.../TableComparator.java:39-71``
