@@ -895,10 +895,11 @@ class TokenTable:
         snapshot isolation). When the head moved under the committer, the
         commit is re-based onto the new head and retried, provided every path
         this commit removes is still live there — i.e. no concurrent commit
-        rewrote or deleted a file we read. A true overlap (some removed path
-        already gone) raises ``CommitConflictError``; the operator must
-        re-plan. Reference analogue: per-table failure-isolated metastore
-        upserts (``core/replica/Replica.java:210-267``,
+        rewrote or deleted a file we read — and no merge-on-read delete that
+        landed since the planning snapshot targets one of them. A true
+        overlap raises ``CommitConflictError``; the operator must re-plan.
+        Reference analogue: per-table failure-isolated metastore upserts
+        (``core/replica/Replica.java:210-267``,
         ``core/Locomotive.java:107-126``).
 
         Merge-on-read deletes: the parent's pending delete entries are
@@ -957,6 +958,17 @@ class TokenTable:
                         f"conflicting concurrent commit: {len(missing)} file(s) this "
                         f"{operation!r} rewrites were removed by another commit "
                         f"(e.g. {sorted(missing)[0]}); re-plan required"
+                    ) from snap_or_conflict
+                # files written from the planning snapshot never saw a delete
+                # that landed since; dropping their inputs would purge it
+                seen = {d["file_path"] for d in self.delete_entries(expected_parent_id)}
+                for d in self.delete_entries(head.snapshot_id):
+                    if d["file_path"] in seen or removed_paths.isdisjoint(d["targets"]):
+                        continue
+                    raise CommitConflictError(
+                        f"conflicting concurrent commit: merge-on-read delete "
+                        f"{d['file_path']} targets file(s) this {operation!r} "
+                        "rewrites; re-plan required"
                     ) from snap_or_conflict
             parent = head
         for fn in self.commit_listeners:

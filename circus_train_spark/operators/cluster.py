@@ -37,10 +37,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta import schema as S
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 from circus_train_spark.functions.zorder import with_zkey
 
 OP = "cluster"
@@ -71,7 +69,6 @@ def cluster(
     max_shard_bins: int = MAX_SHARD_BINS,
 ) -> ClusterResult:
     t0 = time.monotonic()
-    event_id = run_id or new_event_id()
     base = table.current_snapshot()
 
     entries = table.manifest_entries(base.snapshot_id)
@@ -191,42 +188,34 @@ def cluster(
     )
     from circus_train_spark.meta.writers import WriteRequest, writer_for
 
-    out_dir = f"{table.data_dir}/{event_id}/clustered"
-    writer_for(out_dir).write(
-        WriteRequest(
-            df=out,
-            dest_dir=out_dir,
-            partition_cols=[S.WRITE_PART_COL, "_bin"],
-            codec=S.TOKEN_PARQUET_CODEC,
-            mode="overwrite",
+    with table.lineage.run(OP, run_id) as run:
+        out_dir = f"{table.data_dir}/{run.run_id}/clustered"
+        writer_for(out_dir).write(
+            WriteRequest(
+                df=out,
+                dest_dir=out_dir,
+                partition_cols=[S.WRITE_PART_COL, "_bin"],
+                codec=S.TOKEN_PARQUET_CODEC,
+                mode="overwrite",
+            )
         )
-    )
-
-    added = table.collect_entries_for_dir(out_dir, zkey=True)
-
-    table.lineage.append(
-        LineageRecord(
-            run_id=event_id,
+        added = table.collect_entries_for_dir(out_dir, zkey=True)
+        snap = table.commit(
             operation=OP,
-            group_id=event_id,
+            added=added,
+            removed_paths=set(in_files),
+            summary={"curve": curve, "n_out": n_out},
+            expected_parent_id=base.snapshot_id,
+            event_id=run.run_id,
+        )
+        run.record(
             partition=",".join(sorted(source_codes)) if partitions else None,
             files_in=in_files,
             files_out=[e["file_path"] for e in added],
             rows=rows_in,
             bytes_in=bytes_in,
             bytes_out=sum(e["file_size"] for e in added),
-            status=STATUS_DONE,
-            duration_s=time.monotonic() - t0,
         )
-    )
-    snap = table.commit(
-        operation=OP,
-        added=added,
-        removed_paths=set(in_files),
-        summary={"curve": curve, "n_out": n_out},
-        expected_parent_id=base.snapshot_id,
-        event_id=event_id,
-    )
     if verify:
         digest_after = table.table_digest(snap.snapshot_id)
         if digest_after != digest_before:

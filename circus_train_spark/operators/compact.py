@@ -16,8 +16,9 @@ Execution model (scale rationale):
   (``CopyMapper.java:112-150``), with Spark's scheduler replacing the MR
   input-format split planner.
 - **resume**: group ids are content-deterministic; each finished group
-  appends a lineage record. A rerun after a crash re-plans the identical
-  groups, skips the completed ones (outputs verified present), rewrites the
+  appends a ``staged`` lineage checkpoint, and every group turns ``done``
+  once the commit lands. A rerun after a crash re-plans the identical
+  groups, skips the staged ones (outputs verified present), rewrites the
   rest, and commits exactly once (reference analogue: per-table failure
   isolation ``core/Locomotive.java:107-126``).
 - the commit removes exactly the input files and adds the group outputs;
@@ -32,12 +33,11 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta import schema as S
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 from circus_train_spark.operators.binpack import FileGroup, plan_compaction_groups
 
 OP = "compact"
@@ -166,7 +166,6 @@ def compact(
     run_id: str | None = None,
 ) -> CompactionResult:
     t_start = time.monotonic()
-    event_id = run_id or new_event_id()
     base = table.current_snapshot()
 
     entries = table.manifest_entries(base.snapshot_id)
@@ -194,8 +193,14 @@ def compact(
     if verify:
         digest_before = table.table_digest(base.snapshot_id)
 
-    # resume: skip groups already completed by a previous (crashed) run
-    done = table.lineage.completed_groups(OP)
+    # resume: skip groups a previous (crashed or conflicting) run already
+    # wrote — unless a pending delete targets a member, which that output
+    # may predate
+    done = {
+        gid: rec
+        for gid, rec in table.lineage.completed_groups(OP).items()
+        if delete_targets.isdisjoint(rec.files_in)
+    }
     todo = [g for g in groups if g.group_id not in done]
     skipped = [g for g in groups if g.group_id in done]
 
@@ -209,29 +214,24 @@ def compact(
 
     entry_by_path = {e["file_path"]: e for e in entries}
     rows_total = 0
-    with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-        futures = [
-            pool.submit(
-                _rewrite_group,
-                table,
-                g,
-                entry_by_path,
-                event_id,
-                base.snapshot_id,
-                frozenset(delete_targets),
-            )
-            for g in todo
-        ]
-        for fut in futures:
-            g, entries_out, dur = fut.result()
-            all_added.extend(entries_out)
-            removed.update(g.files)
-            rows = sum(e["n_rows"] for e in entries_out)
-            rows_total += rows
-            table.lineage.append(
-                LineageRecord(
-                    run_id=event_id,
-                    operation=OP,
+    with table.lineage.run(OP, run_id) as run:
+        # each group's job carries the caller's job group and properties
+        rewrite = inheritable_thread_target(table.spark)(_rewrite_group)
+        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
+            futures = [
+                pool.submit(
+                    rewrite, table, g, entry_by_path, run.run_id,
+                    base.snapshot_id, frozenset(delete_targets),
+                )
+                for g in todo
+            ]
+            for fut in futures:
+                g, entries_out, dur = fut.result()
+                all_added.extend(entries_out)
+                removed.update(g.files)
+                rows = sum(e["n_rows"] for e in entries_out)
+                rows_total += rows
+                run.stage(
                     group_id=g.group_id,
                     partition=g.partition,
                     files_in=g.files,
@@ -239,22 +239,17 @@ def compact(
                     rows=rows,
                     bytes_in=g.total_bytes,
                     bytes_out=sum(e["file_size"] for e in entries_out),
-                    status=STATUS_DONE,
                     duration_s=dur,
                 )
-            )
 
-    snap = table.commit(
-        operation=OP,
-        added=all_added,
-        removed_paths=removed,
-        summary={
-            "groups": len(groups),
-            "target_file_bytes": target_file_bytes,
-        },
-        expected_parent_id=base.snapshot_id,
-        event_id=event_id,
-    )
+        snap = table.commit(
+            operation=OP,
+            added=all_added,
+            removed_paths=removed,
+            summary={"groups": len(groups), "target_file_bytes": target_file_bytes},
+            expected_parent_id=base.snapshot_id,
+            event_id=run.run_id,
+        )
 
     if verify:
         digest_after = table.table_digest(snap.snapshot_id)

@@ -115,7 +115,7 @@ def delete_where(
     """
     if mode not in ("cow", "mor", "mor-pos", "auto"):
         raise ValueError(f"unknown delete mode {mode!r}")
-    t0, event_id, base = rowlevel.begin(table, run_id)
+    t0, base = time.monotonic(), table.current_snapshot()
     rows_by_file, paths, matched, n_pruned = _classify(
         table, base, predicate, doc_id_range, n_tok_range
     )
@@ -135,36 +135,37 @@ def delete_where(
     positional = use_mor and mode in ("mor-pos", "auto")
     pred = F.expr(predicate)
     survivors, deletes = None, []
-    if use_mor:
-        if positional:
-            keys = (
-                table.read_files(partial, file_col="_file", pos_col="_pos")
-                .filter(pred)
-                .selectExpr("_file AS file_path", "_pos AS row_pos")
-            )
-        else:
-            keys = table.scan(files=partial).filter(pred).select("doc_id")
-        kind = "pos" if positional else "eq"
-        deletes = [rowlevel.key_delete_file(table, event_id, kind, keys, partial)]
-    elif partial:
-        survivors = table.scan(files=partial).filter(~pred | F.isnull(pred))
     removed = set(dropped) | (set() if use_mor else set(partial))
     n_rewritten = 0 if use_mor else len(partial)
-    snap, added = rowlevel.finish(
-        table, OP_DELETE, base, event_id, t0,
-        out=survivors, sub_dir="deleted", removed=removed,
-        added_deletes=deletes, rows=rows_deleted,
-        summary={
-            "predicate": predicate,
-            "mode": ("mor-pos" if positional else "mor") if use_mor else "cow",
-            "requested_mode": mode,
-            "rows_deleted": rows_deleted,
-            "files_dropped_metadata_only": len(dropped),
-            "files_rewritten": n_rewritten,
-            "delete_files_written": len(deletes),
-            "files_pruned_by_stats": n_pruned,
-        },
-    )
+    with table.lineage.run(OP_DELETE, run_id) as run:
+        if use_mor:
+            if positional:
+                keys = (
+                    table.read_files(partial, file_col="_file", pos_col="_pos")
+                    .filter(pred)
+                    .selectExpr("_file AS file_path", "_pos AS row_pos")
+                )
+            else:
+                keys = table.scan(files=partial).filter(pred).select("doc_id")
+            kind = "pos" if positional else "eq"
+            deletes = [rowlevel.key_delete_file(table, run.run_id, kind, keys, partial)]
+        elif partial:
+            survivors = table.scan(files=partial).filter(~pred | F.isnull(pred))
+        snap, added = rowlevel.finish(
+            table, run, base,
+            out=survivors, sub_dir="deleted", removed=removed,
+            added_deletes=deletes, rows=rows_deleted,
+            summary={
+                "predicate": predicate,
+                "mode": ("mor-pos" if positional else "mor") if use_mor else "cow",
+                "requested_mode": mode,
+                "rows_deleted": rows_deleted,
+                "files_dropped_metadata_only": len(dropped),
+                "files_rewritten": n_rewritten,
+                "delete_files_written": len(deletes),
+                "files_pruned_by_stats": n_pruned,
+            },
+        )
     if verify:
         post = table.scan()
         assert post.filter(pred).count() == 0, "matching rows survived"
@@ -221,7 +222,7 @@ def update_where(
     ``mor_max_fraction`` guards it (``requested_mode`` records a fallback)."""
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown update mode {mode!r}")
-    t0, event_id, base = rowlevel.begin(table, run_id)
+    t0, base = time.monotonic(), table.current_snapshot()
     data_cols = [f.name for f in table.data_schema().fields]
     bad = set(assignments) - set(data_cols)
     if bad:
@@ -253,24 +254,25 @@ def update_where(
     def old_versions(added: list[dict]) -> list[dict]:
         doc_ids = T.StructType([T.StructField("doc_id", T.StringType())])
         keys = table.read_files([e["file_path"] for e in added], schema=doc_ids)
-        return [rowlevel.key_delete_file(table, event_id, "eq", keys, touched)]
+        return [rowlevel.key_delete_file(table, run.run_id, "eq", keys, touched)]
 
     removed = set() if use_mor else set(touched)
-    snap, _ = rowlevel.finish(
-        table, OP_UPDATE, base, event_id, t0,
-        out=out, sub_dir="updated", removed=removed,
-        added_deletes=old_versions if use_mor else [], rows=rows_updated,
-        summary={
-            "predicate": predicate,
-            "assignments": assignments,
-            "mode": "mor" if use_mor else "cow",
-            "requested_mode": mode,
-            "rows_updated": rows_updated,
-            "files_rewritten": len(removed),
-            "delete_files_written": int(use_mor),
-            "files_pruned_by_stats": n_pruned,
-        },
-    )
+    with table.lineage.run(OP_UPDATE, run_id) as run:
+        snap, _ = rowlevel.finish(
+            table, run, base,
+            out=out, sub_dir="updated", removed=removed,
+            added_deletes=old_versions if use_mor else [], rows=rows_updated,
+            summary={
+                "predicate": predicate,
+                "assignments": assignments,
+                "mode": "mor" if use_mor else "cow",
+                "requested_mode": mode,
+                "rows_updated": rows_updated,
+                "files_rewritten": len(removed),
+                "delete_files_written": int(use_mor),
+                "files_pruned_by_stats": n_pruned,
+            },
+        )
     return UpdateResult(
         snapshot_id=snap.snapshot_id,
         rows_updated=rows_updated,

@@ -24,8 +24,6 @@ from dataclasses import dataclass
 import pyarrow.parquet as pq
 
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
-from circus_train_spark.ids import new_event_id
 
 OP = "expire_snapshots"
 
@@ -100,42 +98,33 @@ def expire_snapshots(
 
     bytes_reclaimed = 0
     if not dry_run:
-        if grace_period_ms > 0:
-            from circus_train_spark.operators.housekeeping import schedule_deletions
+        with table.lineage.run(OP) as run:
+            if grace_period_ms > 0:
+                from circus_train_spark.operators.housekeeping import schedule_deletions
 
-            schedule_deletions(
-                table, sorted(dead_files) + sorted(dead_manifests)
-            )
-            bytes_reclaimed = 0  # reclaimed later by run_housekeeping
-        else:
-            for p in sorted(dead_files):
-                try:
-                    bytes_reclaimed += os.path.getsize(p)
-                    os.remove(p)
-                except FileNotFoundError:
-                    pass
-            for m in sorted(dead_manifests):
-                try:
-                    os.remove(m)
-                except FileNotFoundError:
-                    pass
-        for sid in expired:
-            table.log.delete_snapshot(sid)
-        table.lineage.append(
-            LineageRecord(
-                run_id=new_event_id(),
-                operation=OP,
+                schedule_deletions(
+                    table, sorted(dead_files) + sorted(dead_manifests)
+                )
+                bytes_reclaimed = 0  # reclaimed later by run_housekeeping
+            else:
+                for p in sorted(dead_files):
+                    try:
+                        bytes_reclaimed += os.path.getsize(p)
+                        os.remove(p)
+                    except FileNotFoundError:
+                        pass
+                for m in sorted(dead_manifests):
+                    try:
+                        os.remove(m)
+                    except FileNotFoundError:
+                        pass
+            for sid in expired:
+                table.log.delete_snapshot(sid)
+            run.record(
                 group_id=f"expire-{min(expired)}-{max(expired)}",
-                partition=None,
                 files_in=sorted(dead_files),
-                files_out=[],
-                rows=0,
                 bytes_in=bytes_reclaimed,
-                bytes_out=0,
-                status=STATUS_DONE,
-                duration_s=time.monotonic() - t0,
             )
-        )
     return ExpireResult(
         expired_snapshots=sorted(expired),
         retained_snapshots=sorted(retained),

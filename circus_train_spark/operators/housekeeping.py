@@ -42,7 +42,6 @@ import pyarrow.parquet as pq
 
 from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 
 OP_ORPHAN = "remove_orphan_files"
 OP_HOUSEKEEPING = "housekeeping"
@@ -139,7 +138,7 @@ def run_housekeeping(
     cutoff = now_ms - grace_period_ms
     deleted = 0
     bytes_reclaimed = 0
-    with _queue_lock(table):
+    with table.lineage.run(OP_HOUSEKEEPING) as run, _queue_lock(table):
         entries = pending_deletions(table)
         due = [e for e in entries if e["scheduled_at_ms"] <= cutoff]
         keep = [e for e in entries if e["scheduled_at_ms"] > cutoff]
@@ -158,22 +157,12 @@ def run_housekeeping(
                 for e in keep:
                     f.write(json.dumps(e) + "\n")
             os.replace(tmp, qp)
-    if due:
-        table.lineage.append(
-            LineageRecord(
-                run_id=new_event_id(),
-                operation=OP_HOUSEKEEPING,
+        if due:
+            run.record(
                 group_id=f"hk-{now_ms}",
-                partition=None,
                 files_in=sorted(e["path"] for e in due),
-                files_out=[],
-                rows=0,
                 bytes_in=bytes_reclaimed,
-                bytes_out=0,
-                status=STATUS_DONE,
-                duration_s=time.monotonic() - t0,
             )
-        )
     return HousekeepingResult(
         files_deleted=deleted,
         bytes_reclaimed=bytes_reclaimed,
@@ -251,41 +240,32 @@ def remove_orphan_files(
     skipped_young = 0
     skipped_sched = 0
     removed_paths: list[str] = []
-    for p in sorted(candidates):
-        if p in scheduled:
-            skipped_sched += 1
-            continue
-        try:
-            st = os.stat(p)
-        except FileNotFoundError:
-            continue
-        if st.st_mtime > cutoff_s:
-            skipped_young += 1
-            continue
-        if not dry_run:
+    with table.lineage.run(OP_ORPHAN) as run:
+        for p in sorted(candidates):
+            if p in scheduled:
+                skipped_sched += 1
+                continue
             try:
-                os.remove(p)
+                st = os.stat(p)
             except FileNotFoundError:
                 continue
-        bytes_reclaimed += st.st_size
-        deleted += 1
-        removed_paths.append(p)
-    if deleted and not dry_run:
-        table.lineage.append(
-            LineageRecord(
-                run_id=new_event_id(),
-                operation=OP_ORPHAN,
+            if st.st_mtime > cutoff_s:
+                skipped_young += 1
+                continue
+            if not dry_run:
+                try:
+                    os.remove(p)
+                except FileNotFoundError:
+                    continue
+            bytes_reclaimed += st.st_size
+            deleted += 1
+            removed_paths.append(p)
+        if deleted and not dry_run:
+            run.record(
                 group_id=f"orphan-{now_ms}",
-                partition=None,
                 files_in=removed_paths,
-                files_out=[],
-                rows=0,
                 bytes_in=bytes_reclaimed,
-                bytes_out=0,
-                status=STATUS_DONE,
-                duration_s=time.monotonic() - t0,
             )
-        )
     return OrphanResult(
         files_deleted=deleted,
         bytes_reclaimed=bytes_reclaimed,

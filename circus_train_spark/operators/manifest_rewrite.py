@@ -14,13 +14,14 @@ metadata/placement rewrite, which is exactly what this op does to manifests.
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta.catalog import TokenTable, carry_state
 
 OP = "rewrite_manifests"
@@ -47,39 +48,36 @@ def rewrite_manifests(
     tables = [pq.read_table(m) for m in base.manifests]
     combined = pa.concat_tables(tables)
     n = len(combined)
-    # split into target_manifests roughly equal slices
-    new_paths: list[str] = []
-    per = -(-n // target_manifests)
-    import os
-    import uuid
-
-    for i in range(0, n, per):
-        chunk = combined.slice(i, per)
-        path = os.path.join(table.manifest_dir, f"manifest-{uuid.uuid4().hex}.parquet")
-        pq.write_table(chunk, path)
-        new_paths.append(path)
-
-    # this op swaps the manifest list wholesale, so it commits through the
-    # log directly — but like every other commit it carries the snapshot
-    # state forward (schema, artifacts, views, pending MOR deletes) and
-    # notifies commit listeners.
-    summary = carry_state(
-        base,
-        {
-            "manifests_before": len(base.manifests),
-            "manifests_after": len(new_paths),
-            "entries": n,
-        },
-    )
-    snap = table.log.commit(
-        expected_parent_id=base.snapshot_id,
-        event_id=new_event_id(),
-        operation=OP,
-        manifests=new_paths,
-        summary=summary,
-    )
-    for fn in table.commit_listeners:
-        fn(snap)
+    per = -(-n // target_manifests)  # target_manifests roughly equal slices
+    with table.lineage.run(OP) as run:
+        new_paths = []
+        for i in range(0, n, per):
+            name = f"manifest-{uuid.uuid4().hex}.parquet"
+            path = os.path.join(table.manifest_dir, name)
+            pq.write_table(combined.slice(i, per), path)
+            new_paths.append(path)
+        # this op swaps the manifest list wholesale, so it commits through the
+        # log directly — but like every other commit it carries the snapshot
+        # state forward (schema, artifacts, views, pending MOR deletes) and
+        # notifies commit listeners.
+        summary = carry_state(
+            base,
+            {
+                "manifests_before": len(base.manifests),
+                "manifests_after": len(new_paths),
+                "entries": n,
+            },
+        )
+        snap = table.log.commit(
+            expected_parent_id=base.snapshot_id,
+            event_id=run.run_id,
+            operation=OP,
+            manifests=new_paths,
+            summary=summary,
+        )
+        for fn in table.commit_listeners:
+            fn(snap)
+        run.record(files_in=list(base.manifests), files_out=new_paths, rows=n)
     # validation: identical entry multiset (cheap driver-side check)
     before = sorted(
         (r["file_path"], r["n_rows"], r["xor_digest"]) for r in combined.to_pylist()

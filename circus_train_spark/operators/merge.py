@@ -58,7 +58,7 @@ def merge_into(
     run_id: str | None = None,
     extra_summary: dict | None = None,
 ) -> MergeResult:
-    t0, event_id, base = rowlevel.begin(table, run_id)
+    t0, base = time.monotonic(), table.current_snapshot()
     data_cols = [f.name for f in table.data_schema().fields]
     changes = changes.select(*data_cols, "_op").cache()
     try:
@@ -92,19 +92,20 @@ def merge_into(
                 plan.keyside(changes.select("doc_id")), "doc_id", "left_anti"
             )
             out = survivors.unionByName(out)
-        snap, added = rowlevel.finish(
-            table, OP, base, event_id, t0,
-            out=out, sub_dir="merged", removed=set(touched),
-            rows=n_inserted + n_updated + n_deleted,
-            summary={
-                "strategy": plan.strategy,
-                "inserted": n_inserted,
-                "updated": n_updated,
-                "deleted": n_deleted,
-                "files_pruned_by_stats": plan.n_pruned,
-                **(extra_summary or {}),
-            },
-        )
+        with table.lineage.run(OP, run_id) as run:
+            snap, added = rowlevel.finish(
+                table, run, base,
+                out=out, sub_dir="merged", removed=set(touched),
+                rows=n_inserted + n_updated + n_deleted,
+                summary={
+                    "strategy": plan.strategy,
+                    "inserted": n_inserted,
+                    "updated": n_updated,
+                    "deleted": n_deleted,
+                    "files_pruned_by_stats": plan.n_pruned,
+                    **(extra_summary or {}),
+                },
+            )
         if verify:
             _verify_merge(table, base.snapshot_id, snap.snapshot_id, changes)
     finally:
@@ -206,7 +207,7 @@ def merge_conditional(
     ``probe_columns`` plus ``doc_id`` when given) → ONLY files holding an
     actionable row are rewritten through the cascade → INSERT rows (source
     anti-join the candidates' keys) are appended → one atomic commit."""
-    t0, event_id, base = rowlevel.begin(table, run_id)
+    t0, base = time.monotonic(), table.current_snapshot()
     data_cols = [f.name for f in table.data_schema().fields]
     for c in clauses:
         c.validate(data_cols)
@@ -281,22 +282,23 @@ def merge_conditional(
             ins = unmatched.select(*_clause_projection(data_cols, insert_clauses, "s_"))
             out = ins if out is None else out.unionByName(ins)
 
-        snap, added = rowlevel.finish(
-            table, "merge_conditional", base, event_id, t0,
-            out=out, sub_dir="merged", removed=set(touched),
-            rows=n_inserted + n_updated + n_deleted,
-            summary={
-                "strategy": plan.strategy,
-                "inserted": n_inserted,
-                "updated": n_updated,
-                "deleted": n_deleted,
-                "clauses": [
-                    f"WHEN {c.when} AND {c.condition or 'TRUE'} THEN {c.action}"
-                    for c in clauses
-                ],
-                "files_pruned_by_stats": plan.n_pruned,
-            },
-        )
+        with table.lineage.run("merge_conditional", run_id) as run:
+            snap, added = rowlevel.finish(
+                table, run, base,
+                out=out, sub_dir="merged", removed=set(touched),
+                rows=n_inserted + n_updated + n_deleted,
+                summary={
+                    "strategy": plan.strategy,
+                    "inserted": n_inserted,
+                    "updated": n_updated,
+                    "deleted": n_deleted,
+                    "clauses": [
+                        f"WHEN {c.when} AND {c.condition or 'TRUE'} THEN {c.action}"
+                        for c in clauses
+                    ],
+                    "files_pruned_by_stats": plan.n_pruned,
+                },
+            )
     finally:
         srcd.unpersist()
     return MergeConditionalResult(

@@ -19,11 +19,13 @@ token tables:
   manifest without moving a byte (the S3→S3 server-side copy analogue,
   ``S3S3Copier.java:138-199``: data never flows through the engine).
 
-Every run appends one lineage record per replicated partition
+Every run stages one lineage unit per replicated partition
 (files-in/files-out/rows/bytes — the reference's per-partition counters,
-``CopyMapper.java:142-145``) and commits once, atomically. Reruns of a
-failed run resume: partitions already recorded DONE for the same source
-snapshot are skipped.
+``CopyMapper.java:142-145``) as soon as its data is written, commits once,
+atomically, and only then marks the units ``done``. Reruns of a crashed or
+failed run resume: partitions already staged or done for the same source
+snapshot are not re-copied, and staged outputs that never reached a commit
+are adopted into the new one.
 
 Scale: the copy is one Spark job per run (`read files … write partitionBy`),
 shuffle-free (repartition by partition value + doc_id hash only to control
@@ -37,9 +39,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
 from circus_train_spark.operators.diff import (
     STATUS_CHANGED,
     STATUS_DELETED,
@@ -85,7 +85,6 @@ def replicate(
     if mode not in ("full", "incremental", "metadata"):
         raise ValueError(f"unknown replication mode: {mode}")
     t0 = time.monotonic()
-    event_id = run_id or new_event_id()
     src_snap = source.current_snapshot()
     rep_snap = replica.current_snapshot()
 
@@ -137,51 +136,6 @@ def replicate(
         if e["partition"] in set(todo) | set(dropped) | set(adopt)
     }
 
-    # adopted (crash-recovered) entries MUST survive the branches below:
-    # extend, never reassign — a reassignment would commit the adopted
-    # partitions' old files as removed while dropping their replacements.
-    added: list[dict] = []
-    for p in adopt:
-        added.extend(replica.collect_entries_for_files(done[key(p)].files_out))
-    if src_entries:
-        if mode == "metadata":
-            # rebind source files into the replica manifest — no data I/O
-            added += [dict(e) for e in src_entries]
-        else:
-            in_files = [e["file_path"] for e in src_entries]
-            bytes_in = sum(e["file_size"] for e in src_entries)
-            n_out = max(1, -(-bytes_in // target_file_bytes))
-            df = source.scan(files=in_files)
-            # shuffle-free copy: source files are single-source, so coalesced
-            # read splits stream rows source-contiguously into the writers
-            added += replica.write_data_files(
-                df, event_id, num_files=n_out, sub_dir="replicated", shuffle=False
-            )
-
-    by_part_in: dict[str, list[dict]] = {}
-    for e in src_entries:
-        by_part_in.setdefault(e["partition"], []).append(e)
-    by_part_out: dict[str, list[dict]] = {}
-    for e in added:
-        by_part_out.setdefault(e["partition"], []).append(e)
-    for p in todo:
-        ins, outs = by_part_in.get(p, []), by_part_out.get(p, [])
-        replica.lineage.append(
-            LineageRecord(
-                run_id=event_id,
-                operation=OP,
-                group_id=key(p),
-                partition=p,
-                files_in=[e["file_path"] for e in ins],
-                files_out=[e["file_path"] for e in outs],
-                rows=sum(e["n_rows"] for e in outs),
-                bytes_in=sum(e["file_size"] for e in ins),
-                bytes_out=sum(e["file_size"] for e in outs),
-                status=STATUS_DONE,
-                duration_s=0.0,
-            )
-        )
-
     # schema artifacts travel with the replica: copy the files into the
     # replica tree and rebind the pointers in the SAME atomic commit (the
     # AvroSerDeTableTransformation + SchemaCopier behavior,
@@ -205,37 +159,74 @@ def replicate(
         n: t for n, t in translated.items() if rep_views.get(n) != t
     }
 
+    # adopted (crash-recovered) entries MUST survive the branches below:
+    # extend, never reassign — a reassignment would commit the adopted
+    # partitions' old files as removed while dropping their replacements.
+    added: list[dict] = []
+    for p in adopt:
+        added.extend(replica.collect_entries_for_files(done[key(p)].files_out))
     snap = None
-    if added or removed or artifacts_to_bind or views_to_bind:
-        # partition-granularity column statistics travel WITH the replica
-        # commit (the reference copies table- and partition-level
-        # ColumnStatistics to the replica in 1000-partition batches,
-        # core/replica/Replica.java:250-267). Here they are folded from the
-        # source's per-file manifest stats — metadata-only, one dict entry
-        # per replicated partition — so a replica reader gets explicit
-        # partition stats without re-aggregating files.
-        src_part_stats = source.table_stats(src_snap.snapshot_id)["partitions"]
-        summary = {
-            "mode": mode,
-            "source_snapshot": src_snap.snapshot_id,
-            "partitions": len(todo),
-            "dropped_partitions": len(dropped),
-            "partition_stats": {
-                p: src_part_stats[p] for p in todo if p in src_part_stats
-            },
-        }
-        if artifacts_to_bind:
-            summary["artifacts"] = replica.bind_artifacts_from(source)
-        if views_to_bind:
-            summary["views"] = {**rep_views, **views_to_bind}
-        snap = replica.commit(
-            operation=OP,
-            added=added,
-            removed_paths=removed,
-            summary=summary,
-            expected_parent_id=rep_snap.snapshot_id,
-            event_id=event_id,
-        )
+    with replica.lineage.run(OP, run_id) as run:
+        if src_entries and mode == "metadata":
+            # rebind source files into the replica manifest — no data I/O
+            added += [dict(e) for e in src_entries]
+        elif src_entries:
+            in_files = [e["file_path"] for e in src_entries]
+            bytes_in = sum(e["file_size"] for e in src_entries)
+            n_out = max(1, -(-bytes_in // target_file_bytes))
+            df = source.scan(files=in_files)
+            # shuffle-free copy: source files are single-source, so coalesced
+            # read splits stream rows source-contiguously into the writers
+            added += replica.write_data_files(
+                df, run.run_id, num_files=n_out, sub_dir="replicated", shuffle=False
+            )
+        by_part_in: dict[str, list[dict]] = {}
+        for e in src_entries:
+            by_part_in.setdefault(e["partition"], []).append(e)
+        by_part_out: dict[str, list[dict]] = {}
+        for e in added:
+            by_part_out.setdefault(e["partition"], []).append(e)
+        for p in todo:
+            ins, outs = by_part_in.get(p, []), by_part_out.get(p, [])
+            run.stage(
+                group_id=key(p),
+                partition=p,
+                files_in=[e["file_path"] for e in ins],
+                files_out=[e["file_path"] for e in outs],
+                rows=sum(e["n_rows"] for e in outs),
+                bytes_in=sum(e["file_size"] for e in ins),
+                bytes_out=sum(e["file_size"] for e in outs),
+            )
+        if added or removed or artifacts_to_bind or views_to_bind:
+            # partition-granularity column statistics travel WITH the replica
+            # commit (the reference copies table- and partition-level
+            # ColumnStatistics to the replica in 1000-partition batches,
+            # core/replica/Replica.java:250-267). Here they are folded from
+            # the source's per-file manifest stats — metadata-only, one dict
+            # entry per replicated partition — so a replica reader gets
+            # explicit partition stats without re-aggregating files.
+            src_part_stats = source.table_stats(src_snap.snapshot_id)["partitions"]
+            summary = {
+                "mode": mode,
+                "source_snapshot": src_snap.snapshot_id,
+                "partitions": len(todo),
+                "dropped_partitions": len(dropped),
+                "partition_stats": {
+                    p: src_part_stats[p] for p in todo if p in src_part_stats
+                },
+            }
+            if artifacts_to_bind:
+                summary["artifacts"] = replica.bind_artifacts_from(source)
+            if views_to_bind:
+                summary["views"] = {**rep_views, **views_to_bind}
+            snap = replica.commit(
+                operation=OP,
+                added=added,
+                removed_paths=removed,
+                summary=summary,
+                expected_parent_id=rep_snap.snapshot_id,
+                event_id=run.run_id,
+            )
     return ReplicationResult(
         snapshot_id=snap.snapshot_id if snap else None,
         mode=mode,

@@ -16,7 +16,6 @@ producing a table of dangling paths.
 
 from __future__ import annotations
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta.catalog import TokenTable, carry_state
 from circus_train_spark.meta.snapshot import Snapshot
 
@@ -41,13 +40,15 @@ def rollback(table: TokenTable, snapshot_id: int, run_id: str | None = None) -> 
     # schema, artifacts, views and pending merge-on-read deletes
     summary["schema"] = table.data_schema(snapshot_id).json()
     carry_state(target, summary)
-    snap = table.log.commit(
-        expected_parent_id=head.snapshot_id,
-        event_id=run_id or new_event_id(),
-        operation=OP,
-        manifests=list(target.manifests),
-        summary=summary,
-    )
-    for fn in table.commit_listeners:
-        fn(snap)
+    with table.lineage.run(OP, run_id) as run:
+        snap = table.log.commit(
+            expected_parent_id=head.snapshot_id,
+            event_id=run.run_id,
+            operation=OP,
+            manifests=list(target.manifests),
+            summary=summary,
+        )
+        for fn in table.commit_listeners:
+            fn(snap)
+        run.record()
     return snap

@@ -7,18 +7,18 @@ commit once. ``delete.py`` and ``merge.py`` keep only their row plans and
 share these steps: ``source_plan`` (MERGE's change-set pre-pass),
 ``probe`` (ONE job classifying candidate files through
 ``TokenTable.read_files``), ``key_delete_file`` (a merge-on-read delete
-file) and ``finish`` (new data files, one lineage record, one commit).
+file) and ``finish`` (new data files, one commit, one lineage unit).
 
-Lineage is the same for all four operators: ``files_in`` lists the files
-the commit removes or a new delete file targets, ``bytes_in`` is their
-size, ``rows`` the rows deleted, updated or inserted.
+Lineage is one unit for all four operators, recorded after the commit:
+``files_in`` lists the files the commit removes or a new delete file
+targets, ``bytes_in`` is their size, ``rows`` the rows deleted, updated or
+inserted.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import time
 from bisect import bisect_left
 from dataclasses import dataclass
 
@@ -26,9 +26,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
+from circus_train_spark.meta.lineage import LineageRun
 
 # Change sets up to this many rows are broadcast to the MERGE joins (decided
 # from the known change-set size, like Catalyst's autoBroadcastJoinThreshold);
@@ -39,11 +38,6 @@ BROADCAST_THRESHOLD_ROWS = 1_000_000
 DRIVER_PRUNE_THRESHOLD_KEYS = 200_000
 
 MERGE_OPS = ("upsert", "delete")
-
-
-def begin(table: TokenTable, run_id: str | None):
-    """``(t0, event_id, base snapshot)`` for one row-level change."""
-    return time.monotonic(), run_id or new_event_id(), table.current_snapshot()
 
 
 # ------------------------------------------------------------ source plan
@@ -131,30 +125,33 @@ class SourcePlan:
 
 def source_plan(table: TokenTable, base, source: DataFrame) -> SourcePlan:
     """MERGE's pre-pass over ``source`` (``doc_id`` plus, for
-    ``merge_into``, ``_op``): reject duplicate keys and any ``_op`` other
-    than ``upsert`` / ``delete`` (NULL included), decide the broadcast, and
-    prune the base snapshot's files by their doc_id range. A change set of
-    at most ``DRIVER_PRUNE_THRESHOLD_KEYS`` rows is collected ONCE (an
-    incremental CollectLimit) and handled driver-side; a larger one pays
-    one aggregation pass and the distributed prune."""
+    ``merge_into``, ``_op``): reject NULL and duplicate keys and any
+    ``_op`` other than ``upsert`` / ``delete`` (NULL included), decide the
+    broadcast, and prune the base snapshot's files by their doc_id range.
+    A change set of at most ``DRIVER_PRUNE_THRESHOLD_KEYS`` rows is
+    collected ONCE (an incremental CollectLimit) and handled driver-side; a
+    larger one pays one aggregation pass and the distributed prune."""
     op = F.col("_op") if "_op" in source.columns else F.lit("upsert")
     ops = source.select("doc_id", op.alias("_op"))
     head = ops.limit(DRIVER_PRUNE_THRESHOLD_KEYS + 1).collect()
     small = len(head) <= DRIVER_PRUNE_THRESHOLD_KEYS
     bad_op = ~F.col("_op").isin(*MERGE_OPS) | F.col("_op").isNull()
     if small:
-        keys = sorted({r["doc_id"] for r in head})
+        keys = {r["doc_id"] for r in head} - {None}
         n_rows, n_distinct = len(head), len(keys)
+        n_null = sum(1 for r in head if r["doc_id"] is None)
         n_upserts = sum(1 for r in head if r["_op"] == "upsert")
         bad = {r["_op"] for r in head} - set(MERGE_OPS)
     else:
         pre = ops.agg(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct("doc_id").alias("nd"),
+            F.count(F.when(F.col("doc_id").isNull(), 1)).alias("nnull"),
             F.count(F.when(F.col("_op") == "upsert", 1)).alias("nu"),
             F.count(F.when(bad_op, 1)).alias("nbad"),
         ).collect()[0]
         n_rows, n_distinct, n_upserts = pre["n"], pre["nd"], pre["nu"]
+        n_null = pre["nnull"]
         bad = set()
         if pre["nbad"]:  # error path only: name a few of the bad values
             named = ops.filter(bad_op).select("_op").distinct().limit(10).collect()
@@ -164,6 +161,11 @@ def source_plan(table: TokenTable, base, source: DataFrame) -> SourcePlan:
             f"unknown MERGE _op values {', '.join(sorted(map(repr, bad)))}: "
             f"every change row must be one of {MERGE_OPS}"
         )
+    if n_null:
+        raise ValueError(
+            f"MERGE change set has {n_null} row(s) with a NULL doc_id "
+            "(every change row needs a key)"
+        )
     if n_distinct != n_rows:
         raise ValueError(
             f"ambiguous MERGE: {n_rows - n_distinct} duplicate doc_id keys in "
@@ -171,7 +173,7 @@ def source_plan(table: TokenTable, base, source: DataFrame) -> SourcePlan:
         )
     entries = table.manifest_entries(base.snapshot_id)
     if small:
-        candidates, n_pruned = _prune_by_stats_local(entries, keys)
+        candidates, n_pruned = _prune_by_stats_local(entries, sorted(keys))
     else:
         candidates, n_pruned = _prune_by_stats(entries, source.select("doc_id"))
     return SourcePlan(
@@ -224,10 +226,8 @@ def key_delete_file(
 
 def finish(
     table: TokenTable,
-    op: str,
+    run: LineageRun,
     base,
-    event_id: str,
-    t0: float,
     *,
     out: DataFrame | None,
     sub_dir: str,
@@ -237,39 +237,34 @@ def finish(
     summary: dict,
 ):
     """Write ``out`` as new data files (shuffle-free: a scan of
-    single-source files already groups rows by source within tasks), record
-    one lineage entry and make one commit against ``base`` removing
-    ``removed`` and adding the new files plus ``added_deletes`` — or a
-    function of the new data-file entries returning them, for delete keys
-    read back from the rows this commit writes. Returns
-    ``(snapshot, new data-file entries)``."""
+    single-source files already groups rows by source within tasks), make
+    one commit of ``run.operation`` against ``base`` removing ``removed``
+    and adding the new files plus ``added_deletes`` — or a function of the
+    new data-file entries returning them, for delete keys read back from
+    the rows this commit writes — then record the run's one lineage unit.
+    Returns ``(snapshot, new data-file entries)``."""
     added = []
     if out is not None:
-        added = table.write_data_files(out, event_id, sub_dir=sub_dir, shuffle=False)
+        added = table.write_data_files(out, run.run_id, sub_dir=sub_dir, shuffle=False)
     if callable(added_deletes):
         added_deletes = added_deletes(added)
-    files_in = sorted(removed.union(*(d["targets"] for d in added_deletes)))
-    entries = table.manifest_entries(base.snapshot_id)
-    size = {e["file_path"]: e["file_size"] for e in entries}
-    table.lineage.append(
-        LineageRecord(
-            run_id=event_id, operation=op, group_id=event_id, partition=None,
-            files_in=files_in,
-            files_out=[e["file_path"] for e in [*added, *added_deletes]],
-            rows=rows,
-            bytes_in=sum(size[f] for f in files_in),
-            bytes_out=sum(e["file_size"] for e in added),
-            status=STATUS_DONE,
-            duration_s=time.monotonic() - t0,
-        )
-    )
     snap = table.commit(
-        operation=op,
+        operation=run.operation,
         added=added,
         removed_paths=removed,
         added_deletes=list(added_deletes),
         summary=summary,
         expected_parent_id=base.snapshot_id,
-        event_id=event_id,
+        event_id=run.run_id,
+    )
+    files_in = sorted(removed.union(*(d["targets"] for d in added_deletes)))
+    entries = table.manifest_entries(base.snapshot_id)
+    size = {e["file_path"]: e["file_size"] for e in entries}
+    run.record(
+        files_in=files_in,
+        files_out=[e["file_path"] for e in [*added, *added_deletes]],
+        rows=rows,
+        bytes_in=sum(size[f] for f in files_in),
+        bytes_out=sum(e["file_size"] for e in added),
     )
     return snap, added

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.meta.lineage import STATUS_DONE, LineageRecord
+from circus_train_spark.meta.lineage import STATUS_DONE
 
 OP = "stream_ingest"
 
@@ -110,41 +110,34 @@ def ingest_stream(
             F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
             for f in table.data_schema().fields
         ]
-        if mode == "upsert":
-            from circus_train_spark.operators.merge import merge_into
+        with table.lineage.run(OP) as run:
+            if mode == "upsert":
+                from circus_train_spark.operators.merge import merge_into
 
-            res = merge_into(
-                table,
-                batch_df.select(*cols).withColumn("_op", F.lit("upsert")),
-                verify=False,
-                extra_summary={"stream_batch_id": gid},
-            )
-            snap = table.snapshot(res.snapshot_id)
-        else:
-            snap = table.append(
-                batch_df.select(*cols),
-                num_files=num_files,
-                summary={"stream_batch_id": gid},
-            )
-        entries = [
-            e
-            for e in table.manifest_entries(snap.snapshot_id)
-            if e["added_snapshot_id"] == snap.snapshot_id
-        ]
-        table.lineage.append(
-            LineageRecord(
-                run_id=snap.event_id,
-                operation=OP,
+                res = merge_into(
+                    table,
+                    batch_df.select(*cols).withColumn("_op", F.lit("upsert")),
+                    verify=False,
+                    extra_summary={"stream_batch_id": gid},
+                )
+                snap = table.snapshot(res.snapshot_id)
+            else:
+                snap = table.append(
+                    batch_df.select(*cols),
+                    num_files=num_files,
+                    summary={"stream_batch_id": gid},
+                )
+            entries = [
+                e
+                for e in table.manifest_entries(snap.snapshot_id)
+                if e["added_snapshot_id"] == snap.snapshot_id
+            ]
+            run.record(
                 group_id=gid,
-                partition=None,
-                files_in=[],
                 files_out=[e["file_path"] for e in entries],
                 rows=sum(e["n_rows"] for e in entries),
-                bytes_in=0,
                 bytes_out=sum(e["file_size"] for e in entries),
-                status=STATUS_DONE,
             )
-        )
 
     writer = (
         stream_df.writeStream.foreachBatch(_sink)

@@ -282,6 +282,72 @@ def test_mor_delete_state_survives_concurrent_rebase(spark, tmp_path, tokens_df)
     assert t.table_digest() == d_before
 
 
+def _mor_delete(t: TokenTable, mode: str = "mor"):
+    return delete_where(t, "n_tok < 32", mode=mode, mor_max_fraction=1.0, verify=False)
+
+
+@pytest.mark.parametrize("mode", ["mor", "mor-pos"])
+def test_rewrite_over_concurrent_mor_delete_must_replan(
+    spark, tmp_path, tokens_df, mode
+):
+    """A rewrite written from ``base`` never saw a merge-on-read delete
+    that landed after it: rebasing would drop the delete's target files and
+    purge the delete, bringing its rows back. The commit must refuse."""
+    from circus_train_spark.meta.catalog import CommitConflictError
+
+    t = TokenTable.create(spark, str(tmp_path / "morrw"))
+    t.append(tokens_df.limit(400), num_files=8)
+    base = t.current_snapshot().snapshot_id
+    paths = set(t.file_paths())
+    rewrite = t.write_data_files(t.scan(base), "rewrite", num_files=8)
+    res = _mor_delete(t, mode)
+    assert res.delete_files_written == 1 and res.files_dropped == 0
+    n_after = t.scan().count()
+    assert n_after < 400
+
+    with pytest.raises(CommitConflictError, match="re-plan required"):
+        t.commit(
+            operation="rewrite", added=rewrite, removed_paths=paths,
+            expected_parent_id=base,
+        )
+    assert t.current_snapshot().snapshot_id == res.snapshot_id
+    assert t.delete_manifests()
+    assert t.scan().count() == n_after
+    assert t.scan().filter("n_tok < 32").count() == 0
+
+
+def test_compact_racing_mor_delete_fails_with_failed_row(spark, tmp_path, tokens_df):
+    """The same race through compaction: the delete lands between the
+    group rewrites and the commit, so the compaction raises and its run
+    leaves one ``failed`` lineage row."""
+    from circus_train_spark.meta.catalog import CommitConflictError
+    from circus_train_spark.operators.compact import compact
+
+    t = TokenTable.create(spark, str(tmp_path / "morcmp"))
+    t.append(tokens_df.limit(400), num_files=8)
+    real_commit = t.commit
+
+    def race(**kw):
+        t.commit = real_commit
+        _mor_delete(t)
+        return real_commit(**kw)
+
+    t.commit = race
+    with pytest.raises(CommitConflictError, match="re-plan required"):
+        compact(t, target_file_bytes=512 * 1024 * 1024, verify=False, run_id="raced")
+    assert t.current_snapshot().operation == "delete"
+    assert t.scan().filter("n_tok < 32").count() == 0
+    rows = [r for r in t.lineage.records("compact") if r.run_id == "raced"]
+    assert [r.status for r in rows] == ["failed"]
+    assert "CommitConflictError" in rows[0].error
+    # the re-run may not resume from a group the delete targets: its staged
+    # output predates the delete
+    d_before = t.table_digest()
+    compact(t, target_file_bytes=512 * 1024 * 1024, verify=False)
+    assert not t.delete_manifests()
+    assert t.table_digest() == d_before
+
+
 # ------------------------------------------------- positional delete files
 
 

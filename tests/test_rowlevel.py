@@ -1,6 +1,7 @@
 """The shared row-level change path under DELETE, UPDATE, MERGE and
-conditional MERGE: Spark-job budgets, the large-change-set MERGE plans and
-change-set validation."""
+conditional MERGE: Spark-job budgets (with those of compaction, clustering,
+manifest rewrite and rollback on the same table), the large-change-set
+MERGE plans and change-set validation."""
 
 from __future__ import annotations
 
@@ -11,7 +12,10 @@ from pyspark.sql import functions as F
 
 from circus_train_spark.meta.catalog import TokenTable
 from circus_train_spark.operators import rowlevel
+from circus_train_spark.operators.cluster import cluster
+from circus_train_spark.operators.compact import compact
 from circus_train_spark.operators.delete import delete_where, update_where
+from circus_train_spark.operators.manifest_rewrite import rewrite_manifests
 from circus_train_spark.operators.merge import (
     MergeClause,
     merge_conditional,
@@ -64,6 +68,14 @@ CLAUSES = [
 ]
 
 
+def _split_manifest(t: TokenTable) -> TokenTable:
+    """Move one entry into a manifest of its own (a metadata-only commit,
+    no Spark job), so there are two manifests to rewrite."""
+    e = t.manifest_entries()[0]
+    t.commit(operation="split", removed_paths={e["file_path"]}, added=[e])
+    return t
+
+
 def _count_jobs(spark, fn) -> int:
     sc = spark.sparkContext
     group = f"job-budget-{uuid.uuid4().hex}"
@@ -102,6 +114,10 @@ JOB_BUDGET = {
             t, _cond_source(s), CLAUSES, probe_columns=["n_tok"]
         ),
     ),
+    "compact": (1, lambda t, s: compact(t, verify=False)),
+    "cluster": (4, lambda t, s: cluster(t, verify=False)),
+    "rewrite-manifests": (0, lambda t, s: rewrite_manifests(_split_manifest(t))),
+    "rollback": (0, lambda t, s: rollback(t, t.current_snapshot().parent_id)),
 }
 
 
@@ -163,3 +179,24 @@ def test_merge_rejects_unknown_op(spark, table, monkeypatch, large):
     with pytest.raises(ValueError, match="'updte', None"):
         merge_into(table, changes)
     assert table.current_snapshot().snapshot_id == sid
+
+
+@pytest.mark.parametrize("large", [False, True])
+def test_merge_rejects_null_key(spark, table, monkeypatch, large):
+    """A NULL ``doc_id`` in the change set is named as such on both
+    change-set paths (it used to be a bare ``TypeError`` when collected, and
+    a "duplicate keys" error from the aggregation, which skips NULLs)."""
+    if large:
+        monkeypatch.setattr(rowlevel, "BROADCAST_THRESHOLD_ROWS", 0)
+        monkeypatch.setattr(rowlevel, "DRIVER_PRUNE_THRESHOLD_KEYS", 0)
+    changes = generate_changes(spark, N_ROWS, seed=11).withColumn(
+        "doc_id",
+        F.when(F.col("doc_id") != "doc-0000000000000001", F.col("doc_id")),
+    )
+    sid = table.current_snapshot().snapshot_id
+    n_lineage = len(table.lineage.records("merge"))
+    with pytest.raises(ValueError, match="has 1 row\\(s\\) with a NULL doc_id"):
+        merge_into(table, changes)
+    assert table.current_snapshot().snapshot_id == sid
+    # rejected before the first write: no lineage row, not even a failed one
+    assert len(table.lineage.records("merge")) == n_lineage
