@@ -100,6 +100,26 @@ def _scale_to_bits(v: np.ndarray, v_min: int, v_max: int, bits: int = BITS) -> n
     return np.clip(scaled, 0, (1 << bits) - 1).astype(np.uint64)
 
 
+def _key_kernel(
+    source_codes: dict[str, int], n_tok_min: int, n_tok_max: int, curve: str
+):
+    """``(doc_hash, n_tok, source) -> int64 keys``: folded doc hash and
+    scaled ``n_tok`` on a Hilbert curve, or with the source code on a morton
+    curve. Boundary sampling and the write pass share it, so a row's bin is
+    looked up with the key its boundaries were cut from."""
+    codes = dict(source_codes)
+
+    def keys(doc_hash: pd.Series, n_tok: pd.Series, source: pd.Series) -> np.ndarray:
+        a = _fold_hash_to_bits(doc_hash.to_numpy())
+        b = _scale_to_bits(n_tok.to_numpy(), n_tok_min, n_tok_max)
+        if curve == "hilbert":
+            return hilbert2(a, b)
+        c = source.map(codes).fillna(0).to_numpy(dtype=np.uint64)
+        return morton3(a, b, c)
+
+    return keys
+
+
 def make_zkey_udf(
     source_codes: dict[str, int],
     n_tok_min: int,
@@ -112,18 +132,11 @@ def make_zkey_udf(
     cardinality) ``source`` column; it is captured in the closure and shipped
     once per task via Arrow, never per row.
     """
-    codes = dict(source_codes)
+    keys = _key_kernel(source_codes, n_tok_min, n_tok_max, curve)
 
     @F.pandas_udf(T.LongType())
     def zkey(doc_hash: pd.Series, n_tok: pd.Series, source: pd.Series) -> pd.Series:
-        a = _fold_hash_to_bits(doc_hash.to_numpy())
-        b = _scale_to_bits(n_tok.to_numpy(), n_tok_min, n_tok_max)
-        if curve == "hilbert":
-            out = hilbert2(a, b)
-        else:
-            c = source.map(codes).fillna(0).to_numpy(dtype=np.uint64)
-            out = morton3(a, b, c)
-        return pd.Series(out)
+        return pd.Series(keys(doc_hash, n_tok, source))
 
     return zkey
 
@@ -166,56 +179,34 @@ def make_zbin_udf(
     on ``pmod(xxhash64(doc_id), n_shards)`` (the same expression the
     boundary job groups on), and each shard carries its own boundary list —
     so the per-source bin count is unbounded while every sketch stays small.
-    ``boundaries[s][i]`` / ``offsets[s][i]`` are shard *i* of source *s*.
+    ``boundaries[s][i]`` / ``offsets[s][i]`` are shard *i* of source *s*; a
+    source without sub-shards is its own single shard 0.
     """
-    codes = dict(source_codes)
+    keys = _key_kernel(source_codes, n_tok_min, n_tok_max, curve)
     bnds = {
         s: [np.asarray(b, dtype=np.int64) for b in per_shard]
         for s, per_shard in boundaries.items()
     }
     offs = {s: list(o) for s, o in offsets.items()}
     shards = {s: int(n) for s, n in (n_shards or {}).items()}
+    no_bounds = np.empty(0, dtype=np.int64)  # every row lands at the offset
 
     @F.pandas_udf("zkey bigint, bin int")
     def zbin(doc_hash: pd.Series, n_tok: pd.Series, source: pd.Series) -> pd.DataFrame:
-        a = _fold_hash_to_bits(doc_hash.to_numpy())
-        b = _scale_to_bits(n_tok.to_numpy(), n_tok_min, n_tok_max)
-        if curve == "hilbert":
-            zk = hilbert2(a, b)
-        else:
-            c = source.map(codes).fillna(0).to_numpy(dtype=np.uint64)
-            zk = morton3(a, b, c)
+        zk = keys(doc_hash, n_tok, source)
         src = source.to_numpy()
         h = doc_hash.to_numpy()
         bins = np.zeros(len(zk), dtype=np.int64)
         for s in pd.unique(source):
             m = src == s
-            blist = bnds.get(s) or []
-            olist = offs.get(s) or [0]
+            blist, olist = bnds.get(s) or [], offs.get(s) or [0]
             ns = shards.get(s, 1)
-            if ns <= 1:
-                bd = blist[0] if blist else None
-                off = olist[0]
-                if bd is None or len(bd) == 0:
-                    bins[m] = off
-                else:
-                    bins[m] = off + np.searchsorted(bd, zk[m], side="right")
-            else:
-                # same pmod as the boundary job's _shard column
-                sh = np.mod(h[m], np.int64(ns))
-                sub = np.zeros(int(m.sum()), dtype=np.int64)
-                zs = zk[m]
-                for i in range(ns):
-                    mm = sh == i
-                    if not mm.any():
-                        continue
-                    bd = blist[i] if i < len(blist) else None
-                    off = olist[i] if i < len(olist) else 0
-                    if bd is None or len(bd) == 0:
-                        sub[mm] = off
-                    else:
-                        sub[mm] = off + np.searchsorted(bd, zs[mm], side="right")
-                bins[m] = sub
+            sh = np.mod(h, np.int64(ns))  # the boundary job's _shard column
+            for i in range(ns):
+                mm = m & (sh == i)
+                bd = blist[i] if i < len(blist) else no_bounds
+                off = olist[i] if i < len(olist) else 0
+                bins[mm] = off + np.searchsorted(bd, zk[mm], side="right")
         return pd.DataFrame({"zkey": zk, "bin": bins.astype(np.int32)})
 
     return zbin

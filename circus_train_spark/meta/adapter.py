@@ -13,7 +13,8 @@ snapshot-log interaction goes through the ``CatalogAdapter`` protocol below.
 
 An adapter must provide: ``current_id() / current() / get(sid) /
 all_snapshot_ids() / history() / snapshot_path(sid) / delete_snapshot(sid) /
-commit(expected_parent_id, event_id, operation, manifests, summary)``.
+commit(expected_parent_id, event_id, operation, manifests, summary) /
+fast_forward(sid, expected_head)`` (checked commits and WAP publish).
 """
 
 from __future__ import annotations
@@ -57,6 +58,8 @@ class CatalogAdapter(Protocol):
     def branch_head(self, branch: str = "main") -> int | None: ...
 
     def next_id(self) -> int: ...
+
+    def fast_forward(self, to_snapshot_id: int, expected_head: int | None) -> None: ...
 
 
 class InMemoryCatalog:

@@ -53,7 +53,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from functools import reduce
 
 import pyarrow as pa
@@ -268,31 +268,33 @@ class TokenTable:
     def publish(self, staged_snapshot_id: int) -> Snapshot:
         """Publish a ``stage_only`` (write-audit-publish) snapshot to main.
 
-        Fast-forwards the head pointer when the staged snapshot's parent is
-        still the head (pure O(1) metadata swap); otherwise cherry-picks —
-        re-applies the staged delta (added manifest + removed paths, recorded
-        in the staged summary at stage time) on the current head through the
-        normal rebase-checked commit, so a concurrent rewrite of a file the
-        staged commit replaced still raises CommitConflictError."""
-        staged = self.snapshot(staged_snapshot_id)
-        head = self.current_snapshot()
-        if head.snapshot_id == staged.parent_id:
-            try:
-                self.log.fast_forward(staged_snapshot_id, head.snapshot_id)
-                for fn in self.commit_listeners:
-                    fn(staged)
-                return staged
-            except CommitConflictError:
-                pass  # head moved under us — fall through to cherry-pick
-        added_manifest = staged.summary.get("wap_added_manifest")
-        added = pq.read_table(added_manifest).to_pylist() if added_manifest else []
-        removed = set(staged.summary.get("wap_removed_paths", []))
-        return self.commit(
-            operation="publish",
-            added=added,
-            removed_paths=removed,
-            summary={"published_from": staged_snapshot_id},
-        )
+        Fast-forwards the head when the staged snapshot's parent is still
+        the head (an O(1) pointer swap). Otherwise cherry-picks the staged
+        delta — the files and delete files it added, the parent's files it
+        dropped — through ``commit`` against the staged parent, so the
+        rebase checks apply: a concurrent commit that removed one of the
+        dropped files, or a merge-on-read delete since landed on one,
+        raises ``CommitConflictError`` and the head stays put."""
+        sid = staged_snapshot_id
+        staged = self.snapshot(sid)
+        try:
+            self.log.fast_forward(sid, staged.parent_id)
+        except CommitConflictError:  # the head moved
+            entries = self.manifest_entries(sid)
+            live = {e["file_path"] for e in entries}
+            return self.commit(
+                operation="publish",
+                added=[e for e in entries if e["added_snapshot_id"] == sid],
+                removed_paths=set(self.file_paths(staged.parent_id)) - live,
+                added_deletes=[
+                    d for d in self.delete_entries(sid) if d["added_snapshot_id"] == sid
+                ],
+                summary={"published_from": sid},
+                expected_parent_id=staged.parent_id,
+            )
+        for fn in self.commit_listeners:
+            fn(staged)
+        return staged
 
     # --------------------------------------------------------------- schema
     def data_schema(self, snapshot_id: int | None = None):
@@ -886,10 +888,20 @@ class TokenTable:
         conflict_retries: int = 4,
         branch: str = "main",
         stage_only: bool = False,
+        check: Callable[[Snapshot], None] | None = None,
     ) -> Snapshot:
         """Copy-on-write metadata commit: carry forward untouched manifests,
         rewrite manifests that lose entries, add one manifest for new files,
         then atomically swap the snapshot pointer.
+
+        ``check(snapshot)`` (main only, not ``stage_only``) runs before the
+        head moves: each attempt stages its descriptor, calls ``check`` on
+        it (comparing it with ``snapshot.parent_id``, the snapshot it lands
+        on), then fast-forwards the head. A ``CommitConflictError`` — a lost
+        race, or one ``check`` raises — rebases and checks again; an
+        unpublished attempt's descriptor is deleted (its files become
+        orphans), so any other exception from ``check`` propagates with the
+        head unmoved.
 
         Concurrency: optimistic with bounded automatic rebase (Iceberg-style
         snapshot isolation). When the head moved under the committer, the
@@ -909,6 +921,8 @@ class TokenTable:
         appends new entries (``delete_where(mode="mor")``).
         """
         event_id = event_id or new_event_id()
+        if check is not None and (branch != "main" or stage_only):
+            raise ValueError("commit(check=...) publishes to main")
         if branch == "main":
             parent = self.current_snapshot()
         else:
@@ -938,8 +952,19 @@ class TokenTable:
                 summary=summary,
                 event_id=event_id,
                 branch=branch,
-                stage_only=stage_only,
+                stage_only=stage_only or check is not None,
             )
+            if check is not None and isinstance(snap_or_conflict, Snapshot):
+                staged = snap_or_conflict
+                try:
+                    check(staged)
+                    self.log.fast_forward(staged.snapshot_id, staged.parent_id)
+                except BaseException as e:
+                    # not published: drop the descriptor; a conflict rebases
+                    self.log.delete_snapshot(staged.snapshot_id)
+                    if not isinstance(e, CommitConflictError):
+                        raise
+                    snap_or_conflict = e
             if isinstance(snap_or_conflict, Snapshot):
                 snap = snap_or_conflict
                 break
@@ -995,13 +1020,11 @@ class TokenTable:
             manifests = self._rewrite_manifests_for_removal(parent, removed_paths)
         else:
             manifests = list(parent.manifests)
-        added_manifest: str | None = None
         if added:
             stamped = [dict(e) for e in added]
             for e in stamped:
                 e["added_snapshot_id"] = new_sid
-            added_manifest = self.write_manifest(stamped)
-            manifests.append(added_manifest)
+            manifests.append(self.write_manifest(stamped))
         summary = carry_state(parent, dict(summary or {}))
         # merge-on-read delete state: carried forward above; shrink / purge /
         # append here
@@ -1024,12 +1047,6 @@ class TokenTable:
                 summary["delete_manifests"] = [self.write_delete_manifest(survivors)]
             elif changed:
                 summary.pop("delete_manifests", None)
-        if stage_only:
-            # record the delta so publish() can cherry-pick onto a moved head
-            if added_manifest:
-                summary["wap_added_manifest"] = added_manifest
-            if removed_paths:
-                summary["wap_removed_paths"] = sorted(removed_paths)
         summary.setdefault("added_files", len(added))
         summary.setdefault("removed_files", len(removed_paths))
         summary.setdefault("added_rows", sum(e["n_rows"] for e in added))
@@ -1083,47 +1100,21 @@ class TokenTable:
         Replication carries these implicitly — per-file stats ride in the
         manifest entries a replica rebinds or rebuilds."""
         entries = self.manifest_entries(snapshot_id)
+        ranges = (
+            ("min_doc_id", min), ("max_doc_id", max), ("min_n_tok", min), ("max_n_tok", max)
+        )
         per_part: dict[str, dict] = {}
         for e in entries:
             p = per_part.setdefault(
                 e["partition"],
-                {
-                    "files": 0,
-                    "rows": 0,
-                    "bytes": 0,
-                    "min_doc_id": None,
-                    "max_doc_id": None,
-                    "min_n_tok": None,
-                    "max_n_tok": None,
-                },
+                {"files": 0, "rows": 0, "bytes": 0, **{k: None for k, _ in ranges}},
             )
             p["files"] += 1
             p["rows"] += e["n_rows"]
             p["bytes"] += e["file_size"]
-            if e["min_n_tok"] is not None:
-                p["min_n_tok"] = (
-                    e["min_n_tok"]
-                    if p["min_n_tok"] is None
-                    else min(p["min_n_tok"], e["min_n_tok"])
-                )
-            if e["max_n_tok"] is not None:
-                p["max_n_tok"] = (
-                    e["max_n_tok"]
-                    if p["max_n_tok"] is None
-                    else max(p["max_n_tok"], e["max_n_tok"])
-                )
-            if e["min_doc_id"] is not None:
-                p["min_doc_id"] = (
-                    e["min_doc_id"]
-                    if p["min_doc_id"] is None
-                    else min(p["min_doc_id"], e["min_doc_id"])
-                )
-            if e["max_doc_id"] is not None:
-                p["max_doc_id"] = (
-                    e["max_doc_id"]
-                    if p["max_doc_id"] is None
-                    else max(p["max_doc_id"], e["max_doc_id"])
-                )
+            for k, fold in ranges:
+                if e[k] is not None:
+                    p[k] = e[k] if p[k] is None else fold(p[k], e[k])
         return {
             "files": len(entries),
             "rows": sum(e["n_rows"] for e in entries),
@@ -1172,6 +1163,17 @@ class TokenTable:
                         ),
                     }
         return table_digest(self.scan(snapshot_id))
+
+    def assert_rows_preserved(self, snap: Snapshot) -> None:
+        """The ``commit`` check of a row-preserving rewrite (compaction,
+        clustering): ``snap`` holds exactly the rows of the snapshot it
+        lands on, by the order-insensitive digest."""
+        before = self.table_digest(snap.parent_id)
+        after = self.table_digest(snap.snapshot_id)
+        if after != before:
+            raise AssertionError(
+                f"scan-equality violated by {snap.operation}: {before} -> {after}"
+            )
 
     def drop(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -74,6 +74,12 @@ class LineageRun:
         self.units.append(rec)
         return rec
 
+    def adopt(self, rec: LineageRecord) -> None:
+        """Buffer a unit an earlier run staged; it turns ``done`` with this run."""
+        self.units.append(
+            replace(rec, run_id=self.run_id, status=STATUS_DONE, timestamp_ms=0)
+        )
+
     def stage(self, **fields) -> None:
         """``record`` one unit and append it as a ``staged`` resume
         checkpoint now."""

@@ -20,8 +20,9 @@ Plan:
    ~target bytes, single-source, even when a task carries several bins;
 4. per-file min/max **zkey** stats (narrow stats read over the hidden
    persisted columns) go into the manifest for stats-based file skipping;
-5. single atomic commit replacing the partition's files; scan equality
-   verified by order-insensitive digest.
+5. single atomic commit replacing the partition's files; with ``verify``
+   the staged snapshot's order-insensitive digest must equal that of the
+   snapshot it lands on before the head moves.
 
 Exactly one shuffle of the wide rows and exactly one decode of the token
 arrays. At 100 TB: boundaries are O(total_bins) driver memory, the boundary
@@ -37,9 +38,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
+from circus_train_spark.functions.digest import row_hash
+from circus_train_spark.functions.zorder import make_zbin_udf, with_zkey
 from circus_train_spark.meta import schema as S
 from circus_train_spark.meta.catalog import TokenTable
-from circus_train_spark.functions.zorder import with_zkey
+from circus_train_spark.meta.writers import WriteRequest, writer_for
 
 OP = "cluster"
 
@@ -116,9 +119,6 @@ def cluster(
             acc += kb
     n_out = acc
 
-    if verify:
-        digest_before = table.table_digest(base.snapshot_id)
-
     # boundary sampling: narrow columns only (tokens stay on disk)
     boundaries: dict[str, list[list[int]]] = {
         s: [[] for _ in range(n_shards[s])] for s in sources
@@ -159,9 +159,6 @@ def cluster(
                 }
                 boundaries[s][sh] = sorted(picked)
 
-    from circus_train_spark.functions.digest import row_hash
-    from circus_train_spark.functions.zorder import make_zbin_udf
-
     zbin = make_zbin_udf(
         source_codes, n_tok_min, n_tok_max, curve, boundaries, offsets, n_shards
     )
@@ -186,8 +183,6 @@ def cluster(
         .withColumn(S.ROW_HASH_COL, row_hash())
         .withColumn(S.WRITE_PART_COL, F.col("source"))
     )
-    from circus_train_spark.meta.writers import WriteRequest, writer_for
-
     with table.lineage.run(OP, run_id) as run:
         out_dir = f"{table.data_dir}/{run.run_id}/clustered"
         writer_for(out_dir).write(
@@ -207,6 +202,7 @@ def cluster(
             summary={"curve": curve, "n_out": n_out},
             expected_parent_id=base.snapshot_id,
             event_id=run.run_id,
+            check=table.assert_rows_preserved if verify else None,
         )
         run.record(
             partition=",".join(sorted(source_codes)) if partitions else None,
@@ -216,12 +212,6 @@ def cluster(
             bytes_in=bytes_in,
             bytes_out=sum(e["file_size"] for e in added),
         )
-    if verify:
-        digest_after = table.table_digest(snap.snapshot_id)
-        if digest_after != digest_before:
-            raise AssertionError(
-                f"scan-equality violated by clustering: {digest_before} -> {digest_after}"
-            )
     return ClusterResult(
         snapshot_id=snap.snapshot_id,
         files_in=len(in_files),

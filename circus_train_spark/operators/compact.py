@@ -18,12 +18,13 @@ Execution model (scale rationale):
 - **resume**: group ids are content-deterministic; each finished group
   appends a ``staged`` lineage checkpoint, and every group turns ``done``
   once the commit lands. A rerun after a crash re-plans the identical
-  groups, skips the staged ones (outputs verified present), rewrites the
-  rest, and commits exactly once (reference analogue: per-table failure
-  isolation ``core/Locomotive.java:107-126``).
+  groups, adopts the staged ones (outputs verified present; they turn
+  ``done`` with the rerun's commit), rewrites the rest, and commits exactly
+  once (reference analogue: per-table failure isolation
+  ``core/Locomotive.java:107-126``).
 - the commit removes exactly the input files and adds the group outputs;
-  scan equality is checked via the order-insensitive table digest unless
-  disabled.
+  unless disabled, scan equality (``TokenTable.assert_rows_preserved``) is
+  checked on the staged snapshot before the head moves.
 """
 
 from __future__ import annotations
@@ -190,9 +191,6 @@ def compact(
     if not groups:
         return CompactionResult(None, 0, 0, 0, 0, 0, 0, 0, 0.0)
 
-    if verify:
-        digest_before = table.table_digest(base.snapshot_id)
-
     # resume: skip groups a previous (crashed or conflicting) run already
     # wrote — unless a pending delete targets a member, which that output
     # may predate
@@ -206,15 +204,16 @@ def compact(
 
     all_added: list[dict] = []
     removed: set[str] = set()
-    for g in skipped:
-        rec = done[g.group_id]
-        # reuse prior outputs: recompute entries from the surviving files
-        all_added.extend(table.collect_entries_for_files(rec.files_out))
-        removed.update(g.files)
-
     entry_by_path = {e["file_path"]: e for e in entries}
     rows_total = 0
     with table.lineage.run(OP, run_id) as run:
+        for g in skipped:
+            # reuse prior outputs: recompute entries from the surviving
+            # files; the group turns done with this run's commit
+            rec = done[g.group_id]
+            all_added.extend(table.collect_entries_for_files(rec.files_out))
+            removed.update(g.files)
+            run.adopt(rec)
         # each group's job carries the caller's job group and properties
         rewrite = inheritable_thread_target(table.spark)(_rewrite_group)
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
@@ -249,14 +248,8 @@ def compact(
             summary={"groups": len(groups), "target_file_bytes": target_file_bytes},
             expected_parent_id=base.snapshot_id,
             event_id=run.run_id,
+            check=table.assert_rows_preserved if verify else None,
         )
-
-    if verify:
-        digest_after = table.table_digest(snap.snapshot_id)
-        if digest_after != digest_before:
-            raise AssertionError(
-                f"scan-equality violated by compaction: {digest_before} -> {digest_after}"
-            )
 
     return CompactionResult(
         snapshot_id=snap.snapshot_id,

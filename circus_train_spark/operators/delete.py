@@ -137,6 +137,28 @@ def delete_where(
     survivors, deletes = None, []
     removed = set(dropped) | (set() if use_mor else set(partial))
     n_rewritten = 0 if use_mor else len(partial)
+
+    def check(snap):
+        post = table.scan(snap.snapshot_id)
+        assert post.filter(pred).count() == 0, "matching rows survived"
+        # manifest rows are PHYSICAL: a MOR delete leaves rows in place, and
+        # a COW rewrite also drops rows of PRIOR pending MOR deletes — so
+        # matched-row accounting is strict only when neither is in play
+        before = {e["file_path"]: e for e in table.manifest_entries(snap.parent_id)}
+        after = table.manifest_entries(snap.snapshot_id)
+        n_before = sum(e["n_rows"] for e in before.values())
+        n_after = sum(e["n_rows"] for e in after)
+        added_rows = sum(
+            e["n_rows"] for e in after if e["added_snapshot_id"] == snap.snapshot_id
+        )
+        removed_rows = sum(before[f]["n_rows"] for f in removed)
+        assert n_after == n_before - removed_rows + added_rows, "physical row mismatch"
+        prior_pending = any(
+            set(e["targets"]) & removed for e in table.delete_entries(snap.parent_id)
+        )
+        if not use_mor and not prior_pending:
+            assert n_after == n_before - rows_deleted, "row accounting mismatch"
+
     with table.lineage.run(OP_DELETE, run_id) as run:
         if use_mor:
             if positional:
@@ -151,7 +173,7 @@ def delete_where(
             deletes = [rowlevel.key_delete_file(table, run.run_id, kind, keys, partial)]
         elif partial:
             survivors = table.scan(files=partial).filter(~pred | F.isnull(pred))
-        snap, added = rowlevel.finish(
+        snap, _ = rowlevel.finish(
             table, run, base,
             out=survivors, sub_dir="deleted", removed=removed,
             added_deletes=deletes, rows=rows_deleted,
@@ -165,28 +187,8 @@ def delete_where(
                 "delete_files_written": len(deletes),
                 "files_pruned_by_stats": n_pruned,
             },
+            check=check if verify else None,
         )
-    if verify:
-        post = table.scan()
-        assert post.filter(pred).count() == 0, "matching rows survived"
-        n_before = sum(rows_by_file.values())
-        n_after = sum(e["n_rows"] for e in table.manifest_entries(snap.snapshot_id))
-        # manifest rows are PHYSICAL: MOR leaves deleted rows in place until
-        # compaction (the logical scan above is the correctness check), and
-        # a COW rewrite of a file carrying PRIOR pending MOR deletes also
-        # drops those rows physically — strict matched-row accounting only
-        # holds when neither effect is in play
-        prior_pending = any(
-            set(e["targets"]) & removed
-            for e in table.delete_entries(base.snapshot_id)
-        )
-        removed_physical = sum(rows_by_file[f] for f in removed)
-        added_rows = sum(e["n_rows"] for e in added)
-        assert n_after == n_before - removed_physical + added_rows, (
-            "physical row accounting mismatch"
-        )
-        if not use_mor and not prior_pending:
-            assert n_after == n_before - rows_deleted, "row accounting mismatch"
     return DeleteResult(
         snapshot_id=snap.snapshot_id,
         rows_deleted=rows_deleted,

@@ -14,9 +14,10 @@ hash probe, distributed (``core/replica/Replica.java:177-204,290-296``);
 touched files are rewritten with every changed key **left-anti joined**
 away (the propagate-deletes anti-join,
 ``core/replica/DestructiveReplica.java:83-127``) plus all upsert rows; one
-atomic commit. Untouched files stay byte-identical. The change side is
-broadcast up to ``rowlevel.BROADCAST_THRESHOLD_ROWS`` rows, else
-Catalyst/AQE picks a sort-merge or shuffled-hash join.
+atomic commit, whose ``verify=True`` postconditions run on the staged
+snapshot before the head moves. Untouched files stay byte-identical. The
+change side is broadcast up to ``rowlevel.BROADCAST_THRESHOLD_ROWS`` rows,
+else Catalyst/AQE picks a sort-merge or shuffled-hash join.
 """
 
 from __future__ import annotations
@@ -105,9 +106,10 @@ def merge_into(
                     "files_pruned_by_stats": plan.n_pruned,
                     **(extra_summary or {}),
                 },
+                check=(
+                    (lambda snap: _verify_merge(table, snap, changes)) if verify else None
+                ),
             )
-        if verify:
-            _verify_merge(table, base.snapshot_id, snap.snapshot_id, changes)
     finally:
         changes.unpersist()
     return MergeResult(
@@ -315,13 +317,12 @@ def merge_conditional(
     )
 
 
-def _verify_merge(
-    table: TokenTable, before_sid: int, after_sid: int, changes: DataFrame
-) -> None:
-    """Row-level MERGE postconditions, computed distributed (no collect):
-    upsert rows present with exactly the new content, deleted keys absent,
-    untouched rows byte-identical (via digest of the complement)."""
-    after = table.scan(after_sid)
+def _verify_merge(table: TokenTable, snap, changes: DataFrame) -> None:
+    """Row-level MERGE postconditions of the staged ``snap`` against the
+    snapshot it lands on, computed distributed (no collect): upsert rows
+    present with exactly the new content, deleted keys absent, untouched
+    rows byte-identical (via digest of the complement)."""
+    after = table.scan(snap.snapshot_id)
     upserts = changes.filter(F.col("_op") == "upsert")
     # every upsert key appears exactly once with matching content
     bad_upserts = (
@@ -345,7 +346,7 @@ def _verify_merge(
     from circus_train_spark.functions.digest import table_digest
 
     keys = changes.select("doc_id")
-    before_rest = table.scan(before_sid).join(keys, "doc_id", "left_anti")
+    before_rest = table.scan(snap.parent_id).join(keys, "doc_id", "left_anti")
     after_rest = after.join(keys, "doc_id", "left_anti")
     if table_digest(before_rest) != table_digest(after_rest):
         raise AssertionError("rows not referenced by the change set were modified")

@@ -25,7 +25,7 @@ Every run stages one lineage unit per replicated partition
 atomically, and only then marks the units ``done``. Reruns of a crashed or
 failed run resume: partitions already staged or done for the same source
 snapshot are not re-copied, and staged outputs that never reached a commit
-are adopted into the new one.
+are adopted into the new one and turn ``done`` with it.
 
 Scale: the copy is one Spark job per run (`read files … write partitionBy`),
 shuffle-free (repartition by partition value + doc_id hash only to control
@@ -163,10 +163,11 @@ def replicate(
     # extend, never reassign — a reassignment would commit the adopted
     # partitions' old files as removed while dropping their replacements.
     added: list[dict] = []
-    for p in adopt:
-        added.extend(replica.collect_entries_for_files(done[key(p)].files_out))
     snap = None
     with replica.lineage.run(OP, run_id) as run:
+        for p in adopt:
+            added.extend(replica.collect_entries_for_files(done[key(p)].files_out))
+            run.adopt(done[key(p)])
         if src_entries and mode == "metadata":
             # rebind source files into the replica manifest — no data I/O
             added += [dict(e) for e in src_entries]

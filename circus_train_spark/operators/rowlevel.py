@@ -7,7 +7,9 @@ commit once. ``delete.py`` and ``merge.py`` keep only their row plans and
 share these steps: ``source_plan`` (MERGE's change-set pre-pass),
 ``probe`` (ONE job classifying candidate files through
 ``TokenTable.read_files``), ``key_delete_file`` (a merge-on-read delete
-file) and ``finish`` (new data files, one commit, one lineage unit).
+file) and ``finish`` (new data files, one commit, one lineage unit). An
+operator's ``verify=True`` postconditions are the commit's ``check``: they
+run on the staged snapshot before the head moves.
 
 Lineage is one unit for all four operators, recorded after the commit:
 ``files_in`` lists the files the commit removes or a new delete file
@@ -235,6 +237,7 @@ def finish(
     added_deletes=(),
     rows: int,
     summary: dict,
+    check=None,
 ):
     """Write ``out`` as new data files (shuffle-free: a scan of
     single-source files already groups rows by source within tasks), make
@@ -242,6 +245,7 @@ def finish(
     and adding the new files plus ``added_deletes`` — or a function of the
     new data-file entries returning them, for delete keys read back from
     the rows this commit writes — then record the run's one lineage unit.
+    ``check`` is the commit's pre-publish check (``TokenTable.commit``).
     Returns ``(snapshot, new data-file entries)``."""
     added = []
     if out is not None:
@@ -256,6 +260,7 @@ def finish(
         summary=summary,
         expected_parent_id=base.snapshot_id,
         event_id=run.run_id,
+        check=check,
     )
     files_in = sorted(removed.union(*(d["targets"] for d in added_deletes)))
     entries = table.manifest_entries(base.snapshot_id)

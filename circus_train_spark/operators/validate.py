@@ -11,8 +11,8 @@ token table's metadata-vs-data parity:
   back against the manifest (broadcast — the manifest side is small);
 - **table-level**: manifest row-count/byte sums vs data-scan aggregates.
 
-Used after any maintenance op as an independent audit; the per-op
-``verify=True`` digest checks are the fast path, this is the full one.
+An independent audit after any maintenance op; the per-op ``verify=True``
+checks, run on the staged snapshot before the head moves, are the fast path.
 """
 
 from __future__ import annotations

@@ -85,3 +85,27 @@ def test_compact_resume_skips_completed_groups(spark, tmp_path, tokens_df):
     # the skipped group's output files are live in the new snapshot
     live = set(t.file_paths())
     assert set(e["file_path"] for e in out_entries) <= live
+
+
+def test_rerun_records_adopted_groups_as_done(small_file_table):
+    """A run whose commit failed leaves its groups staged; the run that
+    adopts and commits them records each one as ``done``."""
+    t = small_file_table
+    real_commit = t.commit
+    t.commit = lambda **kw: (_ for _ in ()).throw(RuntimeError("injected crash"))
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            compact(t, target_file_bytes=64 * 1024 * 1024, run_id="crashed")
+    finally:
+        t.commit = real_commit
+    staged = set(t.lineage.completed_groups(OP))
+    assert staged
+
+    res = compact(t, target_file_bytes=64 * 1024 * 1024, run_id="rerun")
+    assert res.groups_skipped == len(staged) and res.groups_rewritten == 0
+    by_run = {}
+    for r in t.lineage.records(OP):
+        by_run.setdefault(r.run_id, []).append(r)
+    assert [r.status for r in by_run["crashed"]] == ["failed"]
+    assert {r.group_id for r in by_run["rerun"]} == staged
+    assert {r.status for r in by_run["rerun"]} == {"done"}

@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 from circus_train_spark.meta.adapter import InMemoryCatalog
 from circus_train_spark.meta.catalog import TokenTable
 from circus_train_spark.meta.snapshot import CommitConflictError
+from circus_train_spark.operators.delete import delete_where
 from circus_train_spark.operators.expire import expire_snapshots
+from circus_train_spark.operators.rowlevel import key_delete_file
 
 
 @pytest.fixture()
@@ -129,3 +131,46 @@ def test_stale_fast_forward_raises(table, tokens_df):
     t.append(_extra(tokens_df, 320, 340), num_files=1)
     with pytest.raises(CommitConflictError):
         t.log.fast_forward(staged.snapshot_id, staged.parent_id)
+
+
+def test_publish_over_concurrent_cow_delete_of_its_input_raises(table):
+    """A staged rewrite of every file, published after a copy-on-write
+    delete rewrote some of them, must not land: it would bring the deleted
+    rows back."""
+    t = table
+    eid = "staged-rewrite"
+    staged = t.commit(
+        operation="rewrite",
+        added=t.write_data_files(t.scan(), eid, num_files=1),
+        removed_paths=set(t.file_paths()),
+        stage_only=True,
+        event_id=eid,
+    )
+    victim = t.scan().orderBy("doc_id").first()["doc_id"]
+    delete_where(t, f"doc_id = '{victim}'", verify=False)
+    head = t.current_snapshot().snapshot_id
+    with pytest.raises(CommitConflictError, match="re-plan required"):
+        t.publish(staged.snapshot_id)
+    assert t.current_snapshot().snapshot_id == head
+    assert t.scan().count() == 299
+
+
+def test_publish_keeps_staged_mor_delete_over_moved_head(table, tokens_df):
+    """A staged merge-on-read delete, published after a concurrent append,
+    carries its delete entry onto the new head."""
+    t = table
+    eid = "staged-delete"
+    keys = t.scan().filter("n_tok < 32").select("doc_id")
+    n_deleted = keys.count()
+    assert 0 < n_deleted < 300
+    staged = t.commit(
+        operation="delete",
+        added_deletes=[key_delete_file(t, eid, "eq", keys, t.file_paths())],
+        stage_only=True,
+        event_id=eid,
+    )
+    t.append(_extra(tokens_df, 300, 350), num_files=1)
+    pub = t.publish(staged.snapshot_id)
+    assert pub.operation == "publish"
+    assert len(t.delete_entries()) == 1
+    assert t.scan().count() == 350 - n_deleted

@@ -134,6 +134,23 @@ def test_resume_adopts_crashed_write_alongside_new_partition(pair):
     assert src.table_digest() == rep.table_digest()
 
 
+def test_adopted_partition_is_recorded_done(pair):
+    """The healing run that commits a crashed run's staged partition
+    records it as ``done``."""
+    src, rep = pair
+    real_commit = rep.commit
+    rep.commit = lambda **kw: (_ for _ in ()).throw(RuntimeError("injected crash"))
+    try:
+        with pytest.raises(RuntimeError):
+            replicate(src, rep, mode="full", partition_filter="partition = 'books'")
+    finally:
+        rep.commit = real_commit
+    res = replicate(src, rep, mode="incremental", run_id="healing")
+    assert "books" in res.partitions_skipped
+    healed = [r for r in rep.lineage.records("replicate") if r.run_id == "healing"]
+    assert ("books", "done") in {(r.partition, r.status) for r in healed}
+
+
 # ---------------------------------------------------------- schema artifacts
 
 
