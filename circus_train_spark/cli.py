@@ -516,8 +516,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if a.cmd == "history":
         t = TokenTable.load(spark, a.table)
-        for sid in t.log.all_snapshot_ids():
-            s = t.log.get(sid)
+        for s in t.log.snapshots().values():
             _json(
                 {
                     "snapshot_id": s.snapshot_id,

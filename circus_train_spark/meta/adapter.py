@@ -2,82 +2,169 @@
 
 Circus Train talks to its catalogs through a pluggable factory so users can
 swap the metastore protocol (``README.md:743-750``; the AWS module's Glue
-support is exactly such a plug-in). Our table keeps the same seam: every
-snapshot-log interaction goes through the ``CatalogAdapter`` protocol below.
+support is exactly such a plug-in). Our table keeps the same seam, placed at
+storage: an adapter stores snapshot descriptors and refs and nothing else.
+Commit, staging, checks, fast-forward, branches, tags and id allocation are
+``SnapshotLog``'s rules (``snapshot.py``), which every adapter inherits.
 
-- ``SnapshotLog`` (``snapshot.py``) is the filesystem implementation —
-  atomic pointer swap via flock + os.replace.
-- ``InMemoryCatalog`` here is the alternate implementation (used in tests
-  and as the template for a real Hive/Glue/REST adapter): same optimistic
-  parent check, same Snapshot descriptors, no filesystem.
+The storage methods (``CatalogAdapter``):
 
-An adapter must provide: ``current_id() / current() / get(sid) /
-all_snapshot_ids() / history() / snapshot_path(sid) / delete_snapshot(sid) /
-commit(expected_parent_id, event_id, operation, manifests, summary) /
-fast_forward(sid, expected_head)`` (checked commits and WAP publish).
+- ``get(sid)`` / ``all_snapshot_ids()`` / ``delete(sid)`` — read, list and
+  remove descriptors (``get`` raises ``FileNotFoundError`` for a missing
+  one; ``delete`` of a missing one is a no-op);
+- ``put_if_absent(snapshot)`` — store a descriptor under its id, or raise
+  ``CommitConflictError`` when the id is taken;
+- ``read_refs()`` — ``{"main": head id or None, "branches": {...},
+  "tags": {...}}``, a copy the caller may keep;
+- ``update_refs(fn)`` — one locked read-modify-write: ``fn`` mutates a copy
+  of ``read_refs()``, and the result is stored atomically unless ``fn``
+  raises.
+
+Two adapters ship:
+
+- ``FileCatalog`` — the filesystem layout: ``metadata/snapshots/
+  snap-<id>.json`` put by ``os.link`` of a fsynced temp file, the head in
+  ``metadata/version-hint.text`` and branches/tags in ``metadata/refs.json``,
+  both replaced by ``os.replace`` under ``flock`` on
+  ``metadata/commit.lock``;
+- ``InMemoryCatalog`` — a dict store (tests, and the template for a
+  Hive/Glue/REST adapter), refs swapped under a ``threading.Lock``.
 """
 
 from __future__ import annotations
 
+import copy
+import fcntl
+import json
+import os
 import threading
-import time
+import uuid
+from collections.abc import Callable
 from typing import Protocol, runtime_checkable
 
-from circus_train_spark.meta.snapshot import CommitConflictError, Snapshot
+from circus_train_spark.meta import schema as S
+from circus_train_spark.meta.snapshot import (
+    MAIN_BRANCH,
+    REF_KINDS,
+    CommitConflictError,
+    Snapshot,
+    SnapshotLog,
+)
 
 
 @runtime_checkable
 class CatalogAdapter(Protocol):
-    def current_id(self) -> int | None: ...
-
-    def current(self) -> Snapshot | None: ...
-
     def get(self, snapshot_id: int) -> Snapshot: ...
 
     def all_snapshot_ids(self) -> list[int]: ...
 
-    def history(self) -> list[Snapshot]: ...
+    def put_if_absent(self, snapshot: Snapshot) -> None: ...
 
-    def delete_snapshot(self, snapshot_id: int) -> None: ...
+    def delete(self, snapshot_id: int) -> None: ...
 
-    def commit(
-        self,
-        *,
-        expected_parent_id: int | None,
-        event_id: str,
-        operation: str,
-        manifests: list[str],
-        summary: dict,
-        branch: str = "main",
-        stage_only: bool = False,
-        snapshot_id: int | None = None,
-    ) -> Snapshot: ...
+    def read_refs(self) -> dict: ...
 
-    def refs(self) -> dict: ...
-
-    def branch_head(self, branch: str = "main") -> int | None: ...
-
-    def next_id(self) -> int: ...
-
-    def fast_forward(self, to_snapshot_id: int, expected_head: int | None) -> None: ...
+    def update_refs(self, fn: Callable[[dict], None]) -> None: ...
 
 
-class InMemoryCatalog:
-    """Non-filesystem catalog: snapshots live in a dict, the pointer swap is
-    a lock-guarded compare-and-set. Mirrors SnapshotLog's semantics exactly
-    (optimistic parent check -> CommitConflictError)."""
+def _taken(snapshot_id: int) -> CommitConflictError:
+    return CommitConflictError(f"snapshot id {snapshot_id} was taken by a concurrent commit")
+
+
+def _write_temp(path: str, text: str) -> str:
+    """A fsynced sibling temp file holding ``text``; returns its path."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    return tmp
+
+
+class FileCatalog(SnapshotLog):
+    """Filesystem store for one table root."""
+
+    def __init__(self, root: str):
+        self.snapshot_dir = os.path.join(root, S.SNAPSHOT_DIR)
+        self.hint_path = os.path.join(root, S.VERSION_HINT)
+        self.lock_path = os.path.join(root, S.COMMIT_LOCK)
+        self.refs_path = os.path.join(root, S.REFS_FILE)
+
+    def _path(self, snapshot_id: int) -> str:
+        return os.path.join(self.snapshot_dir, f"snap-{snapshot_id:012d}.json")
+
+    def get(self, snapshot_id: int) -> Snapshot:
+        with open(self._path(snapshot_id)) as f:
+            return Snapshot.from_json(f.read())
+
+    def all_snapshot_ids(self) -> list[int]:
+        try:
+            names = os.listdir(self.snapshot_dir)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[len("snap-") : -len(".json")])
+            for n in names
+            if n.startswith("snap-") and n.endswith(".json")
+        )
+
+    def put_if_absent(self, snapshot: Snapshot) -> None:
+        os.makedirs(self.snapshot_dir, exist_ok=True)
+        path = self._path(snapshot.snapshot_id)
+        tmp = _write_temp(path, snapshot.to_json())
+        try:
+            os.link(tmp, path)  # atomic, and fails if the name exists
+        except FileExistsError:
+            raise _taken(snapshot.snapshot_id) from None
+        finally:
+            os.remove(tmp)
+
+    def delete(self, snapshot_id: int) -> None:
+        try:
+            os.remove(self._path(snapshot_id))
+        except FileNotFoundError:
+            pass
+
+    def read_refs(self) -> dict:
+        try:
+            with open(self.hint_path) as f:
+                head = f.read().strip()
+        except FileNotFoundError:
+            head = ""
+        try:
+            with open(self.refs_path) as f:
+                named = json.load(f)
+        except FileNotFoundError:
+            named = {}
+        return {
+            MAIN_BRANCH: int(head) if head else None,
+            **{k: named.get(k, {}) for k in REF_KINDS},
+        }
+
+    def update_refs(self, fn: Callable[[dict], None]) -> None:
+        os.makedirs(os.path.dirname(self.lock_path), exist_ok=True)
+        with open(self.lock_path, "a") as lock:
+            fcntl.flock(lock.fileno(), fcntl.LOCK_EX)  # released on close
+            old = self.read_refs()
+            new = copy.deepcopy(old)
+            fn(new)
+            if new[MAIN_BRANCH] != old[MAIN_BRANCH]:
+                os.replace(_write_temp(self.hint_path, str(new[MAIN_BRANCH])), self.hint_path)
+            named = {k: new[k] for k in REF_KINDS}
+            if named != {k: old[k] for k in REF_KINDS}:
+                os.replace(
+                    _write_temp(self.refs_path, json.dumps(named, indent=1)), self.refs_path
+                )
+
+
+class InMemoryCatalog(SnapshotLog):
+    """Dict store: descriptors in a dict, refs in one dict that an update
+    replaces wholesale under a lock."""
 
     def __init__(self):
         self._snaps: dict[int, Snapshot] = {}
-        self._head: int | None = None
-        self._refs: dict = {"branches": {}, "tags": {}}
+        self._refs: dict = {MAIN_BRANCH: None, **{k: {} for k in REF_KINDS}}
         self._lock = threading.Lock()
-
-    def current_id(self) -> int | None:
-        return self._head
-
-    def current(self) -> Snapshot | None:
-        return None if self._head is None else self._snaps[self._head]
 
     def get(self, snapshot_id: int) -> Snapshot:
         try:
@@ -88,106 +175,20 @@ class InMemoryCatalog:
     def all_snapshot_ids(self) -> list[int]:
         return sorted(self._snaps)
 
-    def history(self) -> list[Snapshot]:
-        chain: list[Snapshot] = []
-        sid = self._head
-        while sid is not None and sid in self._snaps:
-            snap = self._snaps[sid]
-            chain.append(snap)
-            sid = snap.parent_id
-        return list(reversed(chain))
+    def put_if_absent(self, snapshot: Snapshot) -> None:
+        with self._lock:
+            if snapshot.snapshot_id in self._snaps:
+                raise _taken(snapshot.snapshot_id)
+            self._snaps[snapshot.snapshot_id] = snapshot
 
-    def snapshot_path(self, snapshot_id: int) -> str:
-        return f"memory://snapshots/{snapshot_id}"
-
-    def delete_snapshot(self, snapshot_id: int) -> None:
+    def delete(self, snapshot_id: int) -> None:
         self._snaps.pop(snapshot_id, None)
 
-    # -- refs (mirror SnapshotLog semantics) --------------------------------
-    def refs(self) -> dict:
-        return {k: dict(v) for k, v in self._refs.items()}
+    def read_refs(self) -> dict:
+        return copy.deepcopy(self._refs)
 
-    def branch_head(self, branch: str = "main") -> int | None:
-        if branch == "main":
-            return self._head
-        b = self._refs["branches"].get(branch)
-        return None if b is None else int(b["snapshot_id"])
-
-    def next_id(self) -> int:
-        hi = max(self._snaps) if self._snaps else 0
-        if self._head is not None and self._head > hi:
-            hi = self._head
-        return hi + 1
-
-    def set_ref(self, kind: str, name: str, snapshot_id: int) -> None:
+    def update_refs(self, fn: Callable[[dict], None]) -> None:
         with self._lock:
-            prev = self._refs[kind].get(name)
-            if kind == "tags" and prev and prev["snapshot_id"] != snapshot_id:
-                raise ValueError(f"tag {name!r} is immutable")
-            self._refs[kind][name] = {
-                "snapshot_id": int(snapshot_id),
-                "created_ms": int(time.time() * 1000),
-            }
-
-    def drop_ref(self, kind: str, name: str) -> None:
-        with self._lock:
-            self._refs[kind].pop(name, None)
-
-    def fast_forward(self, to_snapshot_id: int, expected_head: int | None) -> None:
-        with self._lock:
-            if self._head != expected_head:
-                raise CommitConflictError(
-                    f"expected head {expected_head}, found {self._head}"
-                )
-            if self.get(to_snapshot_id).parent_id != self._head:
-                raise CommitConflictError(
-                    f"snapshot {to_snapshot_id} is not a child of head {self._head}"
-                )
-            self._head = to_snapshot_id
-
-    def commit(
-        self,
-        *,
-        expected_parent_id: int | None,
-        event_id: str,
-        operation: str,
-        manifests: list[str],
-        summary: dict,
-        branch: str = "main",
-        stage_only: bool = False,
-        snapshot_id: int | None = None,
-    ) -> Snapshot:
-        with self._lock:
-            cur = self._head if branch == "main" else (
-                None
-                if self._refs["branches"].get(branch) is None
-                else int(self._refs["branches"][branch]["snapshot_id"])
-            )
-            if cur != expected_parent_id:
-                raise CommitConflictError(
-                    f"expected {branch} head {expected_parent_id}, found {cur}"
-                )
-            new_id = self.next_id() if snapshot_id is None else snapshot_id
-            if new_id in self._snaps:
-                raise CommitConflictError(
-                    f"snapshot id {new_id} was taken by a concurrent commit"
-                )
-            snap = Snapshot(
-                snapshot_id=new_id,
-                parent_id=cur,
-                event_id=event_id,
-                timestamp_ms=int(time.time() * 1000),
-                operation=operation,
-                manifests=list(manifests),
-                summary=summary,
-            )
-            self._snaps[new_id] = snap
-            if not stage_only:
-                if branch == "main":
-                    self._head = new_id
-                else:
-                    entry = self._refs["branches"].setdefault(
-                        branch, {"created_ms": int(time.time() * 1000)}
-                    )
-                    entry["snapshot_id"] = new_id
-            return snap
+            refs = copy.deepcopy(self._refs)
+            fn(refs)
+            self._refs = refs

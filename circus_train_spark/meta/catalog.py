@@ -64,8 +64,9 @@ from pyspark.sql import types as T
 
 from circus_train_spark.ids import new_event_id
 from circus_train_spark.meta import schema as S
+from circus_train_spark.meta.adapter import FileCatalog
 from circus_train_spark.meta.lineage import LineageLog
-from circus_train_spark.meta.snapshot import CommitConflictError, Snapshot, SnapshotLog
+from circus_train_spark.meta.snapshot import CommitConflictError, Snapshot
 
 _ARROW_MANIFEST_SCHEMA = pa.schema(
     [
@@ -144,11 +145,11 @@ class TokenTable:
     def __init__(self, spark: SparkSession, root: str, catalog=None):
         self.spark = spark
         self.root = os.path.abspath(root)
-        # pluggable catalog protocol (the MetaStoreClientFactory analogue,
-        # README.md:743-750): every snapshot-log interaction goes through
-        # this adapter — meta/adapter.py defines the interface and an
-        # in-memory alternate; SnapshotLog is the filesystem default.
-        self.log = catalog if catalog is not None else SnapshotLog(self.root)
+        # pluggable catalog (the MetaStoreClientFactory analogue,
+        # README.md:743-750): a storage adapter from meta/adapter.py that
+        # inherits every snapshot-log rule from SnapshotLog; the filesystem
+        # store is the default.
+        self.log = catalog if catalog is not None else FileCatalog(self.root)
         self.lineage = LineageLog(self.root)
         self.data_dir = os.path.join(self.root, S.DATA_DIR)
         self.manifest_dir = os.path.join(self.root, S.MANIFEST_DIR)
@@ -892,24 +893,25 @@ class TokenTable:
     ) -> Snapshot:
         """Copy-on-write metadata commit: carry forward untouched manifests,
         rewrite manifests that lose entries, add one manifest for new files,
-        then atomically swap the snapshot pointer.
+        then put the snapshot descriptor and swap the branch pointer
+        (``SnapshotLog.commit``).
 
-        ``check(snapshot)`` (main only, not ``stage_only``) runs before the
-        head moves: each attempt stages its descriptor, calls ``check`` on
-        it (comparing it with ``snapshot.parent_id``, the snapshot it lands
-        on), then fast-forwards the head. A ``CommitConflictError`` — a lost
-        race, or one ``check`` raises — rebases and checks again; an
-        unpublished attempt's descriptor is deleted (its files become
-        orphans), so any other exception from ``check`` propagates with the
-        head unmoved.
+        ``check(snapshot)`` runs before any ref moves: on the stored
+        descriptor, which it compares with ``snapshot.parent_id``, the
+        snapshot it lands on. A ``CommitConflictError`` — a lost race, or
+        one ``check`` raises — rebases and checks again; any other exception
+        propagates with no ref moved. An attempt that does not land leaves
+        no descriptor (its files become orphans). ``stage_only`` only stores
+        the descriptor: no ref moves, and ``publish`` lands it later.
 
         Concurrency: optimistic with bounded automatic rebase (Iceberg-style
-        snapshot isolation). When the head moved under the committer, the
+        snapshot isolation). When the branch moved under the committer, the
         commit is re-based onto the new head and retried, provided every path
-        this commit removes is still live there — i.e. no concurrent commit
-        rewrote or deleted a file we read — and no merge-on-read delete that
-        landed since the planning snapshot targets one of them. A true
-        overlap raises ``CommitConflictError``; the operator must re-plan.
+        this commit removes, or targets with an added delete entry, is still
+        live there — i.e. no concurrent commit rewrote or deleted a file we
+        read — and no merge-on-read delete that landed since the planning
+        snapshot targets a removed path. A true overlap raises
+        ``CommitConflictError``; the operator must re-plan.
         Reference analogue: per-table failure-isolated metastore upserts
         (``core/replica/Replica.java:210-267``,
         ``core/Locomotive.java:107-126``).
@@ -921,8 +923,6 @@ class TokenTable:
         appends new entries (``delete_where(mode="mor")``).
         """
         event_id = event_id or new_event_id()
-        if check is not None and (branch != "main" or stage_only):
-            raise ValueError("commit(check=...) publishes to main")
         if branch == "main":
             parent = self.current_snapshot()
         else:
@@ -933,72 +933,79 @@ class TokenTable:
         if expected_parent_id is None:
             expected_parent_id = parent.snapshot_id
         elif expected_parent_id != parent.snapshot_id:
-            # surface conflicts early; SnapshotLog re-checks under the lock
+            # plan on the caller's snapshot: the swap fails because the
+            # branch moved, and the rebase below validates the move
             parent = self.snapshot(expected_parent_id)
         added = added or []
         if added:
             for t in self.entry_transforms:
                 added = [t(dict(e)) for e in added]
         removed_paths = removed_paths or set()
+        added_deletes = added_deletes or []
+        # paths that must still be live at any head this commit rebases onto
+        needed = removed_paths.union(*(d["targets"] for d in added_deletes))
 
         attempt = 0
         while True:
-            snap_or_conflict = self._try_commit(
-                operation=operation,
-                parent=parent,
-                added=added,
-                removed_paths=removed_paths,
-                added_deletes=added_deletes or [],
-                summary=summary,
-                event_id=event_id,
-                branch=branch,
-                stage_only=stage_only or check is not None,
-            )
-            if check is not None and isinstance(snap_or_conflict, Snapshot):
-                staged = snap_or_conflict
-                try:
-                    check(staged)
-                    self.log.fast_forward(staged.snapshot_id, staged.parent_id)
-                except BaseException as e:
-                    # not published: drop the descriptor; a conflict rebases
-                    self.log.delete_snapshot(staged.snapshot_id)
-                    if not isinstance(e, CommitConflictError):
-                        raise
-                    snap_or_conflict = e
-            if isinstance(snap_or_conflict, Snapshot):
-                snap = snap_or_conflict
+            try:
+                snap = self._try_commit(
+                    operation=operation,
+                    parent=parent,
+                    added=added,
+                    removed_paths=removed_paths,
+                    added_deletes=added_deletes,
+                    summary=summary,
+                    event_id=event_id,
+                    branch=branch,
+                    stage_only=stage_only,
+                    check=check,
+                )
                 break
-            attempt += 1
-            if attempt > conflict_retries:
-                raise CommitConflictError(
-                    f"commit of {operation!r} lost {attempt} straight races; giving up"
-                ) from snap_or_conflict
-            # rebase: valid iff no concurrent commit touched a file we remove
-            head = self.snapshot(self.log.branch_head(branch))
-            if removed_paths:
-                live = {e["file_path"] for e in self.manifest_entries(head.snapshot_id)}
-                missing = removed_paths - live
-                if missing:
+            except CommitConflictError as conflict:
+                attempt += 1
+                if attempt > conflict_retries:
                     raise CommitConflictError(
-                        f"conflicting concurrent commit: {len(missing)} file(s) this "
-                        f"{operation!r} rewrites were removed by another commit "
-                        f"(e.g. {sorted(missing)[0]}); re-plan required"
-                    ) from snap_or_conflict
-                # files written from the planning snapshot never saw a delete
-                # that landed since; dropping their inputs would purge it
-                seen = {d["file_path"] for d in self.delete_entries(expected_parent_id)}
-                for d in self.delete_entries(head.snapshot_id):
-                    if d["file_path"] in seen or removed_paths.isdisjoint(d["targets"]):
-                        continue
-                    raise CommitConflictError(
-                        f"conflicting concurrent commit: merge-on-read delete "
-                        f"{d['file_path']} targets file(s) this {operation!r} "
-                        "rewrites; re-plan required"
-                    ) from snap_or_conflict
-            parent = head
+                        f"commit of {operation!r} lost {attempt} straight races; giving up"
+                    ) from conflict
+                head = self.snapshot(self.log.branch_head(branch))
+                if needed:
+                    self._validate_rebase(
+                        operation, head, needed, removed_paths, expected_parent_id
+                    )
+                parent = head
         for fn in self.commit_listeners:
             fn(snap)
         return snap
+
+    def _validate_rebase(
+        self,
+        operation: str,
+        head: Snapshot,
+        needed: set[str],
+        removed_paths: set[str],
+        planned_id: int,
+    ) -> None:
+        """Raise ``CommitConflictError`` unless a commit planned on
+        ``planned_id`` may land on ``head``: every ``needed`` path (removed,
+        or targeted by an added delete entry) is live there, and no delete
+        entry added since targets a removed path — files written from the
+        planning snapshot never saw it, so dropping their inputs would
+        purge it."""
+        missing = needed - {e["file_path"] for e in self.manifest_entries(head.snapshot_id)}
+        if missing:
+            raise CommitConflictError(
+                f"conflicting concurrent commit: {len(missing)} file(s) this "
+                f"{operation!r} rewrites or deletes from were removed by another "
+                f"commit (e.g. {sorted(missing)[0]}); re-plan required"
+            )
+        seen = {d["file_path"] for d in self.delete_entries(planned_id)}
+        for d in self.delete_entries(head.snapshot_id):
+            if d["file_path"] not in seen and not removed_paths.isdisjoint(d["targets"]):
+                raise CommitConflictError(
+                    f"conflicting concurrent commit: merge-on-read delete "
+                    f"{d['file_path']} targets file(s) this {operation!r} "
+                    "rewrites; re-plan required"
+                )
 
     def _try_commit(
         self,
@@ -1009,12 +1016,13 @@ class TokenTable:
         removed_paths: set[str],
         summary: dict | None,
         event_id: str,
-        added_deletes: list[dict] | None = None,
-        branch: str = "main",
-        stage_only: bool = False,
-    ) -> "Snapshot | CommitConflictError":
-        """One optimistic attempt against ``parent``; returns the conflict
-        (not raises) so the caller's rebase loop stays exception-clean."""
+        added_deletes: list[dict],
+        branch: str,
+        stage_only: bool,
+        check: Callable[[Snapshot], None] | None,
+    ) -> Snapshot:
+        """One optimistic attempt against ``parent``; a lost race raises
+        ``CommitConflictError``."""
         new_sid = self.log.next_id()
         if removed_paths:
             manifests = self._rewrite_manifests_for_removal(parent, removed_paths)
@@ -1028,11 +1036,10 @@ class TokenTable:
         summary = carry_state(parent, dict(summary or {}))
         # merge-on-read delete state: carried forward above; shrink / purge /
         # append here
-        parent_dms = list(parent.summary.get("delete_manifests", []))
-        if parent_dms or added_deletes:
+        if parent.summary.get("delete_manifests") or added_deletes:
             survivors: list[dict] = []
             changed = False
-            for e in (x for m in parent_dms for x in pq.read_table(m).to_pylist()):
+            for e in self.delete_entries(parent.snapshot_id):
                 live_targets = [t for t in e["targets"] if t not in removed_paths]
                 if len(live_targets) != len(e["targets"]):
                     changed = True
@@ -1040,7 +1047,7 @@ class TokenTable:
                         continue  # purged: every targeted file left the table
                     e = {**e, "targets": live_targets}
                 survivors.append(e)
-            for e in added_deletes or []:
+            for e in added_deletes:
                 changed = True
                 survivors.append({**e, "added_snapshot_id": new_sid})
             if changed and survivors:
@@ -1051,19 +1058,17 @@ class TokenTable:
         summary.setdefault("removed_files", len(removed_paths))
         summary.setdefault("added_rows", sum(e["n_rows"] for e in added))
         summary.setdefault("added_bytes", sum(e["file_size"] for e in added))
-        try:
-            return self.log.commit(
-                expected_parent_id=parent.snapshot_id,
-                event_id=event_id,
-                operation=operation,
-                manifests=manifests,
-                summary=summary,
-                branch=branch,
-                stage_only=stage_only,
-                snapshot_id=new_sid,
-            )
-        except CommitConflictError as e:
-            return e
+        return self.log.commit(
+            expected_parent_id=parent.snapshot_id,
+            event_id=event_id,
+            operation=operation,
+            manifests=manifests,
+            summary=summary,
+            branch=branch,
+            stage_only=stage_only,
+            snapshot_id=new_sid,
+            check=check,
+        )
 
     def append(
         self,

@@ -1,32 +1,42 @@
-"""Snapshot log: immutable JSON snapshot descriptors + atomic pointer swap.
+"""Snapshot log: immutable JSON snapshot descriptors + one compare-and-swap
+of the refs. Every rule of the log lives here, once; a catalog adapter
+(``adapter.py``) supplies storage only.
 
 Semantics (Iceberg-style, built from scratch):
 
-- every commit writes a **new** snapshot JSON file naming the full list of
-  manifest files that make up the table at that version;
-- the *current* version is a single pointer file (``version-hint.text``)
-  swapped atomically via ``os.replace`` under an advisory file lock with an
-  optimistic parent check — a commit racing against another sees
-  ``CommitConflictError`` and re-plans.
+- every commit **puts a new descriptor** naming the full list of manifest
+  files that make up the table at that version. The put is
+  put-if-absent: of two writers that picked the same snapshot id one wins,
+  and the other gets ``CommitConflictError`` with the winner's descriptor
+  untouched;
+- the refs — ``main`` (the table head, a reserved name), named branches and
+  immutable tags — move only by **compare-and-swap**: one locked
+  read-modify-write in which the ref must still hold the snapshot the
+  committer planned on, or the commit raises ``CommitConflictError`` and
+  the caller re-plans;
+- a commit's ``check`` runs between the put and the swap, so a failed check
+  never moves a ref. A commit that does not publish deletes its own
+  descriptor and no other.
+
+On POSIX the put is a fsynced temp file hard-linked (``os.link``) to its
+final name, and the swap is ``flock`` + ``os.replace`` of the pointer file.
+On an object store the put is a conditional put (``If-None-Match: *``) and
+the swap a conditional put of the pointer object (``If-Match`` on the ETag
+it read), so neither needs a lock service.
 
 Reference analogue: Circus Train never mutates live data in place — each run
 writes to a unique event-id folder and commits by metastore pointer update
 (``core/replica/FullReplicationReplicaLocationManager.java:58-97``), with the
 rename-based two-step swap of ``RenameTableOperation.java:42-70``; old
-locations are deleted later by housekeeping. On an object store the pointer
-swap maps to put-if-absent / conditional-put; on POSIX we use
-``flock`` + ``os.replace``.
+locations are deleted later by housekeeping.
 """
 
 from __future__ import annotations
 
-import fcntl
 import json
-import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
-
-from circus_train_spark.meta import schema as S
 
 
 class CommitConflictError(RuntimeError):
@@ -72,52 +82,62 @@ class Snapshot:
 
 
 MAIN_BRANCH = "main"
+REF_KINDS = ("branches", "tags")
+
+
+def _now_ms() -> int:
+    return int(time.time() * 1000)
+
+
+def _check_ref(kind: str, name: str) -> None:
+    if kind not in REF_KINDS:
+        raise ValueError(f"unknown ref kind {kind!r}; expected one of {REF_KINDS}")
+    if name == MAIN_BRANCH:
+        raise ValueError("'main' is the implicit head ref; use commit/rollback")
 
 
 class SnapshotLog:
-    """Filesystem-backed snapshot log for one table root."""
-
-    def __init__(self, root: str):
-        self.root = root
-        self.snapshot_dir = os.path.join(root, S.SNAPSHOT_DIR)
-        self.hint_path = os.path.join(root, S.VERSION_HINT)
-        self.lock_path = os.path.join(root, S.COMMIT_LOCK)
-        self.refs_path = os.path.join(root, S.REFS_FILE)
+    """The rules of the snapshot log. A catalog adapter subclasses it and
+    supplies the storage methods of ``adapter.CatalogAdapter`` (``get``,
+    ``all_snapshot_ids``, ``put_if_absent``, ``delete``, ``read_refs``,
+    ``update_refs``); everything below is written once, in terms of them."""
 
     # -- reads ------------------------------------------------------------
     def current_id(self) -> int | None:
-        try:
-            with open(self.hint_path) as f:
-                text = f.read().strip()
-        except FileNotFoundError:
-            return None
-        return int(text) if text else None
-
-    def snapshot_path(self, snapshot_id: int) -> str:
-        return os.path.join(self.snapshot_dir, f"snap-{snapshot_id:012d}.json")
-
-    def get(self, snapshot_id: int) -> Snapshot:
-        with open(self.snapshot_path(snapshot_id)) as f:
-            return Snapshot.from_json(f.read())
+        return self.read_refs()[MAIN_BRANCH]
 
     def current(self) -> Snapshot | None:
         sid = self.current_id()
         return None if sid is None else self.get(sid)
 
-    def all_snapshot_ids(self) -> list[int]:
-        try:
-            names = os.listdir(self.snapshot_dir)
-        except FileNotFoundError:
-            return []
-        out = []
-        for n in names:
-            if n.startswith("snap-") and n.endswith(".json"):
-                out.append(int(n[len("snap-") : -len(".json")]))
-        return sorted(out)
+    def refs(self) -> dict:
+        """``{"branches": {name: {"snapshot_id": id, ...}}, "tags": {...}}``;
+        ``main`` is the head, not a named ref."""
+        refs = self.read_refs()
+        del refs[MAIN_BRANCH]
+        return refs
+
+    def branch_head(self, branch: str = MAIN_BRANCH) -> int | None:
+        refs = self.read_refs()
+        if branch == MAIN_BRANCH:
+            return refs[MAIN_BRANCH]
+        b = refs["branches"].get(branch)
+        return None if b is None else int(b["snapshot_id"])
+
+    def snapshots(self) -> dict[int, Snapshot]:
+        """Every stored descriptor by id. One deleted between the listing
+        and its read (a commit that lost its race) is skipped."""
+        out = {}
+        for sid in self.all_snapshot_ids():
+            try:
+                out[sid] = self.get(sid)
+            except FileNotFoundError:
+                pass
+        return out
 
     def history(self) -> list[Snapshot]:
         """Ancestor chain of the current snapshot, oldest first. Stops at the
-        oldest *retained* ancestor (expiry deletes older snapshot files)."""
+        oldest *retained* ancestor (expiry deletes older descriptors)."""
         chain: list[Snapshot] = []
         sid = self.current_id()
         while sid is not None:
@@ -129,112 +149,67 @@ class SnapshotLog:
             sid = snap.parent_id
         return list(reversed(chain))
 
-    def delete_snapshot(self, snapshot_id: int) -> None:
-        """Remove an expired snapshot descriptor (no-op if already gone)."""
-        try:
-            os.remove(self.snapshot_path(snapshot_id))
-        except FileNotFoundError:
-            pass
+    def next_id(self) -> int:
+        """Next snapshot id: one past every stored descriptor (branch and
+        staged ones included) and the head. Two writers may pick the same
+        id; ``put_if_absent`` lets one of them win."""
+        return max([*self.all_snapshot_ids(), self.current_id() or 0]) + 1
 
     # -- refs (named branches & tags, Iceberg-style) ------------------------
-    def refs(self) -> dict:
-        """``{"branches": {name: {"snapshot_id": id, ...}}, "tags": {...}}``.
-        ``main`` is implicit (the version hint), never stored here."""
-        try:
-            with open(self.refs_path) as f:
-                d = json.load(f)
-        except FileNotFoundError:
-            d = {}
-        d.setdefault("branches", {})
-        d.setdefault("tags", {})
-        return d
-
-    def branch_head(self, branch: str = MAIN_BRANCH) -> int | None:
-        if branch == MAIN_BRANCH:
-            return self.current_id()
-        b = self.refs()["branches"].get(branch)
-        return None if b is None else int(b["snapshot_id"])
-
-    def _write_refs_locked(self, refs: dict) -> None:
-        self._write_atomic(self.refs_path, json.dumps(refs, indent=1))
-
     def set_ref(self, kind: str, name: str, snapshot_id: int) -> None:
-        """Create/update a named ref under the commit lock. Tags are
-        immutable: re-pointing an existing tag raises."""
-        assert kind in ("branches", "tags")
-        if name == MAIN_BRANCH:
-            raise ValueError("'main' is the implicit head ref; use commit/rollback")
-        os.makedirs(os.path.dirname(self.lock_path), exist_ok=True)
-        with open(self.lock_path, "a") as lock:
-            fcntl.flock(lock.fileno(), fcntl.LOCK_EX)
-            try:
-                refs = self.refs()
-                prev = refs[kind].get(name)
-                if kind == "tags" and prev and prev["snapshot_id"] != snapshot_id:
-                    raise ValueError(
-                        f"tag {name!r} already points at {prev['snapshot_id']}; "
-                        "tags are immutable (drop it first)"
-                    )
-                refs[kind][name] = {
-                    "snapshot_id": int(snapshot_id),
-                    "created_ms": int(time.time() * 1000),
-                }
-                self._write_refs_locked(refs)
-            finally:
-                fcntl.flock(lock.fileno(), fcntl.LOCK_UN)
+        """Create or move a branch, or create a tag. Tags are immutable:
+        re-pointing an existing tag raises ``ValueError``."""
+        _check_ref(kind, name)
+
+        def move(refs: dict) -> None:
+            prev = refs[kind].get(name)
+            if kind == "tags" and prev and prev["snapshot_id"] != snapshot_id:
+                raise ValueError(
+                    f"tag {name!r} already points at {prev['snapshot_id']}; "
+                    "tags are immutable (drop it first)"
+                )
+            refs[kind][name] = {"snapshot_id": int(snapshot_id), "created_ms": _now_ms()}
+
+        self.update_refs(move)
 
     def drop_ref(self, kind: str, name: str) -> None:
-        os.makedirs(os.path.dirname(self.lock_path), exist_ok=True)
-        with open(self.lock_path, "a") as lock:
-            fcntl.flock(lock.fileno(), fcntl.LOCK_EX)
-            try:
-                refs = self.refs()
-                refs[kind].pop(name, None)
-                self._write_refs_locked(refs)
-            finally:
-                fcntl.flock(lock.fileno(), fcntl.LOCK_UN)
+        _check_ref(kind, name)
+        self.update_refs(lambda refs: refs[kind].pop(name, None))
 
-    def next_id(self) -> int:
-        """Next globally-unique snapshot id: max over every snapshot on disk
-        (branch/staged snapshots included) and the current head."""
-        ids = self.all_snapshot_ids()
-        hi = ids[-1] if ids else 0
-        cur = self.current_id()
-        if cur is not None and cur > hi:
-            hi = cur
-        return hi + 1
+    def _swap(self, branch: str, expected: int | None, snapshot_id: int) -> None:
+        """Compare-and-swap ``branch`` from ``expected`` to ``snapshot_id``
+        (a missing branch counts as ``None`` and is created)."""
+
+        def cas(refs: dict) -> None:
+            named = refs["branches"].get(branch, {})
+            cur = refs[MAIN_BRANCH] if branch == MAIN_BRANCH else named.get("snapshot_id")
+            if cur != expected:
+                raise CommitConflictError(
+                    f"expected {branch} head {expected}, found {cur}; re-plan and retry"
+                )
+            if branch == MAIN_BRANCH:
+                refs[MAIN_BRANCH] = snapshot_id
+            else:
+                refs["branches"][branch] = {
+                    "snapshot_id": snapshot_id,
+                    "created_ms": named.get("created_ms", _now_ms()),
+                }
+
+        self.update_refs(cas)
 
     def fast_forward(self, to_snapshot_id: int, expected_head: int | None) -> None:
-        """Atomically advance the main head to ``to_snapshot_id`` (must be a
-        direct child of the current head — the publish half of
-        write-audit-publish). Raises CommitConflictError when the head moved."""
-        with open(self.lock_path, "a") as lock:
-            fcntl.flock(lock.fileno(), fcntl.LOCK_EX)
-            try:
-                cur = self.current_id()
-                if cur != expected_head:
-                    raise CommitConflictError(
-                        f"expected head {expected_head}, found {cur}"
-                    )
-                target = self.get(to_snapshot_id)
-                if target.parent_id != cur:
-                    raise CommitConflictError(
-                        f"snapshot {to_snapshot_id} is not a child of head {cur}; "
-                        "cherry-pick instead"
-                    )
-                self._write_atomic(self.hint_path, str(to_snapshot_id))
-            finally:
-                fcntl.flock(lock.fileno(), fcntl.LOCK_UN)
+        """Move the main head from ``expected_head`` to ``to_snapshot_id``,
+        which must be its direct child (the publish half of
+        write-audit-publish). Raises CommitConflictError when the head
+        moved or the snapshot sits on another parent."""
+        if self.get(to_snapshot_id).parent_id != expected_head:
+            raise CommitConflictError(
+                f"snapshot {to_snapshot_id} is not a child of head {expected_head}; "
+                "cherry-pick instead"
+            )
+        self._swap(MAIN_BRANCH, expected_head, to_snapshot_id)
 
     # -- writes -----------------------------------------------------------
-    def _write_atomic(self, path: str, text: str) -> None:
-        tmp = f"{path}.tmp.{os.getpid()}.{time.monotonic_ns()}"
-        with open(tmp, "w") as f:
-            f.write(text)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-
     def commit(
         self,
         *,
@@ -246,58 +221,40 @@ class SnapshotLog:
         branch: str = MAIN_BRANCH,
         stage_only: bool = False,
         snapshot_id: int | None = None,
+        check: Callable[[Snapshot], None] | None = None,
     ) -> Snapshot:
-        """Atomically advance a ref (``main`` = the table head; any other
-        ``branch`` = its refs.json pointer). Raises CommitConflictError if
-        the ref is no longer ``expected_parent_id``.
+        """Put a new descriptor on ``expected_parent_id``, run ``check`` on
+        it, then compare-and-swap ``branch`` (``main`` = the table head)
+        from ``expected_parent_id`` to it. A taken id or a moved branch
+        raises ``CommitConflictError``.
 
-        ``stage_only`` writes the snapshot descriptor WITHOUT moving any
-        pointer — the write half of write-audit-publish; readers audit it by
-        id, ``fast_forward``/cherry-pick publishes it later.
+        ``stage_only`` stops after the check: the descriptor is stored
+        but no ref moves — the write half of write-audit-publish; readers
+        audit it by id, ``fast_forward`` or a cherry-pick publishes it.
 
         ``snapshot_id`` lets the caller pre-allocate the id it stamped into
-        manifest entries (``added_snapshot_id``); a stale pre-allocation
-        (id taken by a concurrent commit) is a conflict, so the caller's
-        rebase loop re-stamps and retries.
+        manifest entries (``added_snapshot_id``); a stale pre-allocation is
+        a conflict, so the caller's rebase loop re-stamps and retries.
+
+        If ``check`` or the swap raises, the descriptor this call put is
+        deleted and the error propagates.
         """
-        os.makedirs(self.snapshot_dir, exist_ok=True)
-        os.makedirs(os.path.dirname(self.lock_path), exist_ok=True)
-        with open(self.lock_path, "a") as lock:
-            fcntl.flock(lock.fileno(), fcntl.LOCK_EX)
-            try:
-                cur = self.branch_head(branch)
-                if cur != expected_parent_id:
-                    raise CommitConflictError(
-                        f"expected {branch} head {expected_parent_id}, found {cur}; "
-                        "re-plan and retry"
-                    )
-                new_id = self.next_id() if snapshot_id is None else snapshot_id
-                if os.path.exists(self.snapshot_path(new_id)):
-                    raise CommitConflictError(
-                        f"snapshot id {new_id} was taken by a concurrent commit"
-                    )
-                snap = Snapshot(
-                    snapshot_id=new_id,
-                    parent_id=cur,
-                    event_id=event_id,
-                    timestamp_ms=int(time.time() * 1000),
-                    operation=operation,
-                    manifests=list(manifests),
-                    summary=summary,
-                )
-                self._write_atomic(self.snapshot_path(new_id), snap.to_json())
-                if not stage_only:
-                    if branch == MAIN_BRANCH:
-                        self._write_atomic(self.hint_path, str(new_id))
-                    else:
-                        refs = self.refs()
-                        refs["branches"][branch] = {
-                            "snapshot_id": new_id,
-                            "created_ms": refs["branches"]
-                            .get(branch, {})
-                            .get("created_ms", int(time.time() * 1000)),
-                        }
-                        self._write_refs_locked(refs)
-                return snap
-            finally:
-                fcntl.flock(lock.fileno(), fcntl.LOCK_UN)
+        snap = Snapshot(
+            snapshot_id=self.next_id() if snapshot_id is None else snapshot_id,
+            parent_id=expected_parent_id,
+            event_id=event_id,
+            timestamp_ms=_now_ms(),
+            operation=operation,
+            manifests=list(manifests),
+            summary=summary,
+        )
+        self.put_if_absent(snap)
+        try:
+            if check is not None:
+                check(snap)
+            if not stage_only:
+                self._swap(branch, expected_parent_id, snap.snapshot_id)
+        except BaseException:
+            self.delete(snap.snapshot_id)
+            raise
+        return snap

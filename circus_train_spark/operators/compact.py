@@ -18,10 +18,10 @@ Execution model (scale rationale):
 - **resume**: group ids are content-deterministic; each finished group
   appends a ``staged`` lineage checkpoint, and every group turns ``done``
   once the commit lands. A rerun after a crash re-plans the identical
-  groups, adopts the staged ones (outputs verified present; they turn
-  ``done`` with the rerun's commit), rewrites the rest, and commits exactly
-  once (reference analogue: per-table failure isolation
-  ``core/Locomotive.java:107-126``).
+  groups, adopts the staged ones whose outputs are present and hold the
+  inputs' rows and digest (they turn ``done`` with the rerun's commit),
+  rewrites the rest, and commits exactly once (reference analogue:
+  per-table failure isolation ``core/Locomotive.java:107-126``).
 - the commit removes exactly the input files and adds the group outputs;
   unless disabled, scan equality (``TokenTable.assert_rows_preserved``) is
   checked on the staged snapshot before the head moves.
@@ -75,13 +75,20 @@ def _rewrite_schema(table: TokenTable) -> T.StructType:
     )
 
 
+def _fold(entries: list[dict]) -> tuple[int, int]:
+    """(rows, xor digest) of a file set — what a row-preserving rewrite
+    keeps (xor digests compose)."""
+    xor = 0
+    for e in entries:
+        xor ^= e["xor_digest"] or 0
+    return sum(e["n_rows"] for e in entries), xor
+
+
 def _derive_group_entry(group: FileGroup, in_entries: list[dict], out_path: str) -> dict:
     """A bin-pack rewrite is row-preserving, so every manifest stat of the
-    output file is a pure fold of the inputs' stats (xor digests compose);
-    only the physical size comes from the filesystem."""
-    xor = 0
-    for e in in_entries:
-        xor ^= e["xor_digest"] or 0
+    output file is a pure fold of the inputs' stats; only the physical size
+    comes from the filesystem."""
+    n_rows, xor = _fold(in_entries)
 
     def _mm(key, fn):
         vals = [e[key] for e in in_entries if e[key] is not None]
@@ -98,7 +105,7 @@ def _derive_group_entry(group: FileGroup, in_entries: list[dict], out_path: str)
         "file_path": out_path,
         "partition": group.partition,
         "file_size": os.path.getsize(out_path),
-        "n_rows": sum(e["n_rows"] for e in in_entries),
+        "n_rows": n_rows,
         "min_doc_id": _mm("min_doc_id", min),
         "max_doc_id": _mm("max_doc_id", max),
         "min_n_tok": _mm("min_n_tok", min),
@@ -200,19 +207,27 @@ def compact(
         if delete_targets.isdisjoint(rec.files_in)
     }
     todo = [g for g in groups if g.group_id not in done]
-    skipped = [g for g in groups if g.group_id in done]
+    skipped = []
 
     all_added: list[dict] = []
     removed: set[str] = set()
     entry_by_path = {e["file_path"]: e for e in entries}
     rows_total = 0
     with table.lineage.run(OP, run_id) as run:
-        for g in skipped:
-            # reuse prior outputs: recompute entries from the surviving
-            # files; the group turns done with this run's commit
+        for g in groups:
+            if g.group_id not in done:
+                continue
+            # reuse prior outputs, measured from the files, only if they
+            # hold the inputs' rows (a run whose check failed staged them
+            # too); the group turns done with this run's commit
             rec = done[g.group_id]
-            all_added.extend(table.collect_entries_for_files(rec.files_out))
+            outs = table.collect_entries_for_files(rec.files_out)
+            if _fold(outs) != _fold([entry_by_path[p] for p in g.files]):
+                todo.append(g)
+                continue
+            all_added.extend(outs)
             removed.update(g.files)
+            skipped.append(g)
             run.adopt(rec)
         # each group's job carries the caller's job group and properties
         rewrite = inheritable_thread_target(table.spark)(_rewrite_group)

@@ -52,11 +52,11 @@ def expire_snapshots(
     grace period, default P3D — ``HousekeepingRunner.java:56-75``,
     ``README.md:539-554``; run ``run_housekeeping`` to apply them)."""
     t0 = time.monotonic()
-    all_ids = table.log.all_snapshot_ids()
+    snaps = table.log.snapshots()
+    all_ids = sorted(snaps)
     head = table.log.current_id()
-    snaps = {sid: table.log.get(sid) for sid in all_ids}
 
-    retained = set(sorted(all_ids)[-max(1, keep_last) :])
+    retained = set(all_ids[-max(1, keep_last) :])
     retained.add(head)
     if older_than_ms is not None:
         for sid, s in snaps.items():
@@ -119,7 +119,7 @@ def expire_snapshots(
                     except FileNotFoundError:
                         pass
             for sid in expired:
-                table.log.delete_snapshot(sid)
+                table.log.delete(sid)
             run.record(
                 group_id=f"expire-{min(expired)}-{max(expired)}",
                 files_in=sorted(dead_files),

@@ -175,8 +175,7 @@ def _referenced_files(table: TokenTable) -> tuple[set[str], set[str]]:
     """(data files, manifest files) reachable from ANY retained snapshot."""
     data: set[str] = set()
     manifests: set[str] = set()
-    for sid in table.log.all_snapshot_ids():
-        snap = table.log.get(sid)
+    for snap in table.log.snapshots().values():
         # data manifests + merge-on-read delete manifests; the latter's
         # file_path column names equality-delete key files (under data/),
         # which are live for exactly as long as a snapshot references them
@@ -224,8 +223,8 @@ def remove_orphan_files(
                     candidates.append(ap)
     # schema artifacts: referenced by snapshot summaries, any extension
     live_artifacts: set[str] = set()
-    for sid in table.log.all_snapshot_ids():
-        for rel in table.log.get(sid).summary.get("artifacts", {}).values():
+    for snap in table.log.snapshots().values():
+        for rel in snap.summary.get("artifacts", {}).values():
             live_artifacts.add(os.path.abspath(os.path.join(table.root, rel)))
     art_dir = os.path.join(table.root, table.ARTIFACT_DIR)
     if os.path.isdir(art_dir):

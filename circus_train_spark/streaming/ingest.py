@@ -81,14 +81,16 @@ def ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         gid = f"batch-{batch_id}"
         # exactly-once: the authoritative done-set is the batch id stamped in
-        # the snapshot summaries — written in the SAME atomic commit as the
-        # data, so there is no crash window between commit and marker. The
-        # lineage record below is metrics only. (Snapshot expiry can delete
-        # old descriptors, so the lineage log is kept as a secondary guard
-        # for batches whose snapshots have been expired.)
+        # the summaries of the head's history — written in the SAME atomic
+        # commit as the data, so there is no crash window between commit and
+        # marker (a descriptor put by a commit that never swapped the head is
+        # not in the history). The lineage record below is metrics only.
+        # (Snapshot expiry can delete old descriptors, so the lineage log is
+        # kept as a secondary guard for batches whose snapshots have been
+        # expired.)
         done = {
             snap.summary.get("stream_batch_id")
-            for snap in (table.log.get(sid) for sid in table.log.all_snapshot_ids())
+            for snap in table.log.history()
             if "stream_batch_id" in snap.summary
         }
         done |= {

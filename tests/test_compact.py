@@ -109,3 +109,33 @@ def test_rerun_records_adopted_groups_as_done(small_file_table):
     assert [r.status for r in by_run["crashed"]] == ["failed"]
     assert {r.group_id for r in by_run["rerun"]} == staged
     assert {r.status for r in by_run["rerun"]} == {"done"}
+
+
+def test_rerun_after_failed_check_rewrites_bad_staged_groups(
+    spark, tmp_path, tokens_df, monkeypatch
+):
+    """A run whose check failed leaves its group outputs staged; the re-run
+    must rewrite them, not adopt them, and land with the pre-state."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from circus_train_spark.meta import writers
+
+    class LossyWriter(writers.ParquetWriter):
+        def write(self, req: writers.WriteRequest) -> None:
+            victim = req.df.agg(F.min("doc_id")).first()[0]
+            super().write(replace(req, df=req.df.filter(F.col("doc_id") != victim)))
+
+    t = TokenTable.create(spark, str(tmp_path / "tbl"))
+    t.append(tokens_df.limit(400), num_files=8)
+    digest = t.table_digest()
+    with monkeypatch.context() as m:
+        m.setattr(writers, "_REGISTRY", [LossyWriter(), *writers._REGISTRY])
+        with pytest.raises(AssertionError, match="scan-equality violated"):
+            compact(t, target_file_bytes=64 * 1024 * 1024, verify=True)
+    assert t.lineage.completed_groups(OP)
+
+    res = compact(t, target_file_bytes=64 * 1024 * 1024, verify=True)
+    assert res.groups_skipped == 0 and res.groups_rewritten == res.groups_planned
+    assert t.table_digest() == digest

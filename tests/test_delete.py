@@ -316,6 +316,34 @@ def test_rewrite_over_concurrent_mor_delete_must_replan(
     assert t.scan().filter("n_tok < 32").count() == 0
 
 
+@pytest.mark.parametrize("mode", ["mor", "mor-pos"])
+def test_mor_delete_over_concurrent_compaction_must_replan(
+    spark, tmp_path, tokens_df, mode
+):
+    """A merge-on-read delete removes no file, but its delete entry targets
+    the files it deletes from. If a compaction rewrote them since planning,
+    the entry would land on dead files and the deleted rows would stay
+    visible. The rebase must refuse."""
+    from circus_train_spark.meta.catalog import CommitConflictError
+    from circus_train_spark.operators.compact import compact
+
+    t = TokenTable.create(spark, str(tmp_path / "mordead"))
+    t.append(tokens_df.limit(400), num_files=8)
+    real_commit = t.commit
+
+    def race(**kw):
+        t.commit = real_commit
+        compact(t, target_file_bytes=512 * 1024 * 1024, verify=False)
+        return real_commit(**kw)
+
+    t.commit = race
+    with pytest.raises(CommitConflictError, match="re-plan required"):
+        _mor_delete(t, mode)
+    assert t.current_snapshot().operation == "compact"
+    assert not t.delete_manifests()
+    assert t.scan().count() == 400
+
+
 def test_compact_racing_mor_delete_fails_with_failed_row(spark, tmp_path, tokens_df):
     """The same race through compaction: the delete lands between the
     group rewrites and the commit, so the compaction raises and its run
