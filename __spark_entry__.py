@@ -1965,7 +1965,7 @@ def q_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Entry-layer config: 16 hash families x 4 bands — the same rows-per-band
     (r=4, same S-curve steepness) as the 32x8 library default at half the
-    signature CPU (the signature is the CPU-bound stage). The library API
+    signature CPU. The library API
     keeps 32/8; the fixture is generated with the same 16/4."""
     from circus_train_spark.pipeline.dedup import minhash_dedup
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: maintenance suite + headline queries at one scale.
 
-Runs on ``local[$SPARK_GRAFT_CPUS]`` against ``$SPARK_GRAFT_SF_DIR``
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may
+run on) against ``$SPARK_GRAFT_SF_DIR``
 (default ``/root/testdata/sf0.1``) and prints ONE JSON line:
 
     {"metric": ..., "value": <sec>, "unit": "sec", "queries": {...},
@@ -170,7 +171,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:

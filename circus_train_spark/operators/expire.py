@@ -1,10 +1,11 @@
 """Snapshot expiry — deferred deletion of unreachable files.
 
 Retains the most recent ``keep_last`` snapshots (always including the
-current head) and/or those newer than ``older_than_ms``; every other
-snapshot is expired. A data/manifest file is deleted only when **no retained
-snapshot references it** — the anti-join of the expired file set against the
-live file set.
+current head), those newer than ``older_than_ms``, the targets of named
+refs, and staged write-audit-publish snapshots with their parents (see
+``expire_snapshots``); every other snapshot is expired. A data/manifest
+file is deleted only when **no retained snapshot references it** — the
+anti-join of the expired file set against the live file set.
 
 Reference analogue: Circus Train never deletes at replication time — replaced
 locations are queued in a housekeeping database and removed only after a
@@ -50,27 +51,41 @@ def expire_snapshots(
     a long-running reader pinned to a just-expired snapshot finishes its
     scan before the bytes disappear (reference: deletions deferred past a
     grace period, default P3D — ``HousekeepingRunner.java:56-75``,
-    ``README.md:539-554``; run ``run_housekeeping`` to apply them)."""
+    ``README.md:539-554``; run ``run_housekeeping`` to apply them).
+
+    Retained: the last ``keep_last`` snapshot ids, the head, every snapshot
+    at or after ``older_than_ms`` (when set), and every branch head and tag
+    target (drop the ref to release it). A snapshot on no ref's ancestor
+    chain whose parent is still stored branched off without being
+    published: a staged (``stage_only``) snapshot, or a dropped branch's
+    commit. It is retained together with its parent, whose file list the
+    cherry-pick of a late ``publish`` reads, and expires only when
+    ``older_than_ms`` is set and it is older than that (Iceberg's age-only
+    expiry of unreferenced snapshots). A snapshot whose parent an earlier
+    expiry deleted follows the rules above."""
     t0 = time.monotonic()
     snaps = table.log.snapshots()
     all_ids = sorted(snaps)
     head = table.log.current_id()
+    refs = table.log.refs()
+    pinned = [head] + [
+        int(v["snapshot_id"]) for group in (refs["branches"], refs["tags"]) for v in group.values()
+    ]
 
     retained = set(all_ids[-max(1, keep_last) :])
     retained.add(head)
-    if older_than_ms is not None:
-        for sid, s in snaps.items():
-            if s.timestamp_ms >= older_than_ms:
-                retained.add(sid)
-    # named refs pin their snapshots: a tagged snapshot or a branch head is
-    # never expired regardless of age/position (Iceberg ref-retention
-    # semantics; drop the ref to release it)
-    refs = table.log.refs()
-    for group in (refs["branches"], refs["tags"]):
-        for v in group.values():
-            sid = int(v["snapshot_id"])
-            if sid in snaps:
-                retained.add(sid)
+    retained.update(sid for sid in pinned if sid in snaps)
+    on_chain: set[int] = set()
+    for sid in pinned:
+        while sid in snaps and sid not in on_chain:
+            on_chain.add(sid)
+            sid = snaps[sid].parent_id
+    for sid, s in snaps.items():
+        if older_than_ms is not None and s.timestamp_ms >= older_than_ms:
+            retained.add(sid)
+        staged = sid not in on_chain and s.parent_id in snaps
+        if staged and (older_than_ms is None or s.timestamp_ms >= older_than_ms):
+            retained.update((sid, s.parent_id))
     expired = [sid for sid in all_ids if sid not in retained]
     if not expired:
         return ExpireResult([], sorted(retained), 0, 0, 0, time.monotonic() - t0)

@@ -90,16 +90,53 @@ def paragraph_array(
     paragraph markers."""
     if segment_words is not None:
         k = segment_words
+
+        def windows(words: Column) -> Column:
+            n_seg = F.floor((F.size(words) + (k - 1)) / k).cast("int")
+            return F.transform(
+                F.sequence(F.lit(0), n_seg - 1),
+                lambda i: F.array_join(F.slice(words, i * k + 1, k), " "),
+            )
+
+        # A lambda gets no subexpression elimination: one that sliced the
+        # ``split`` expression would re-split the whole text per window.
+        # Binding the word array to the variable of a one-element transform
+        # splits it once per row.
         words = F.split(normalized_text(text), " ")
-        n_seg = F.floor((F.size(words) + (k - 1)) / k).cast("int")
-        return F.transform(
-            F.sequence(F.lit(0), n_seg - 1),
-            lambda i: F.array_join(F.slice(words, i * k + 1, k), " "),
-        )
+        return F.element_at(F.transform(F.array(words), windows), 1)
     parts = F.split(text, sep_regex)
     return F.filter(
         F.transform(parts, lambda p: F.regexp_replace(F.lower(F.trim(p)), r"\s+", " ")),
         lambda p: p != "",
+    )
+
+
+def _rebuild(
+    documents: DataFrame, keep_lists: DataFrame, paras: Column, id_col: str, joiner: str
+) -> DataFrame:
+    """``documents`` plus ``n_paras``, ``n_kept`` and ``text_clean``: the
+    paragraphs at the indexes of ``keep_lists._keep`` (none for a document
+    without a keep-list), joined in order.
+
+    ``paras`` is projected as a column of its own after the join: the
+    rebuild lambda picks from that column, where picking from the
+    expression would re-split and re-normalise every paragraph of the
+    document for each one kept (a lambda gets no subexpression
+    elimination). CollapseProject keeps the projection, because the column
+    is non-cheap and referenced twice."""
+    out = (
+        documents.join(keep_lists, documents[id_col] == keep_lists["_id"], "left")
+        .drop("_id")
+        .withColumn("_paras", paras)
+    )
+    kept = F.coalesce(F.col("_keep"), F.array().cast("array<int>"))
+    return out.select(
+        *documents.columns,
+        F.size("_paras").alias("n_paras"),
+        F.size(kept).alias("n_kept"),
+        F.concat_ws(
+            joiner, F.transform(kept, lambda i: F.element_at(F.col("_paras"), i + 1))
+        ).alias("text_clean"),
     )
 
 
@@ -138,18 +175,7 @@ def paragraph_dedup(
     keep_lists = winners.groupBy("_id").agg(
         F.array_sort(F.collect_list("_idx")).alias("_keep")
     )
-    out = documents.join(
-        keep_lists, documents[id_col] == keep_lists["_id"], "left"
-    ).drop("_id")
-    kept = F.coalesce(F.col("_keep"), F.array().cast("array<int>"))
-    return out.select(
-        *documents.columns,
-        F.size(paras).alias("n_paras"),
-        F.size(kept).alias("n_kept"),
-        F.concat_ws(
-            joiner, F.transform(kept, lambda i: F.element_at(paras, i + 1))
-        ).alias("text_clean"),
-    )
+    return _rebuild(documents, keep_lists, paras, id_col, joiner)
 
 
 def remove_boilerplate(
@@ -190,18 +216,7 @@ def remove_boilerplate(
         .groupBy("_id")
         .agg(F.array_sort(F.collect_list("_idx")).alias("_keep"))
     )
-    out = documents.join(
-        keep_lists, documents[id_col] == keep_lists["_id"], "left"
-    ).drop("_id")
-    kept = F.coalesce(F.col("_keep"), F.array().cast("array<int>"))
-    return out.select(
-        *documents.columns,
-        F.size(paras).alias("n_paras"),
-        F.size(kept).alias("n_kept"),
-        F.concat_ws(
-            joiner, F.transform(kept, lambda i: F.element_at(paras, i + 1))
-        ).alias("text_clean"),
-    )
+    return _rebuild(documents, keep_lists, paras, id_col, joiner)
 
 
 # ------------------------------------------------------------ bucket pairs
@@ -281,14 +296,17 @@ def _release(pairs: DataFrame) -> None:
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Array of word n-gram shingles (distinct), built JVM-side."""
+    """Array of word n-gram shingles (distinct), built JVM-side.
+
+    The n-grams come from ``arrays_zip`` of the ``n`` shifted word slices,
+    and the lambda joins the fields of its element alone. A lambda gets no
+    subexpression elimination, so one that sliced the ``split`` expression
+    would re-split the whole text once per shingle."""
     words = F.split(normalized_text(text), " ")
     k = F.greatest(F.size(words) - (n - 1), F.lit(0))
     grams = F.transform(
-        F.sequence(F.lit(0), k - 1),
-        lambda i: F.concat_ws(
-            " ", F.slice(words, i + 1, n)
-        ),
+        F.arrays_zip(*[F.slice(words, j + 1, k) for j in range(n)]),
+        lambda z: F.concat_ws(" ", *[z[str(j)] for j in range(n)]),
     )
     # short docs: fall back to the whole text as one shingle
     return F.when(k > 0, F.array_distinct(grams)).otherwise(
@@ -322,8 +340,14 @@ def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
 def with_minhash(
     documents: DataFrame, text_col: str = "text", num_hashes: int = 32, shingle_n: int = 3
 ) -> DataFrame:
-    return documents.withColumn(
-        "minhash", minhash_signature(word_shingles(F.col(text_col), shingle_n), num_hashes)
+    # The shingles get a projection of their own that every hash family
+    # reads: CollapseProject does not inline a non-cheap expression referenced
+    # more than once, so each row builds its shingle set once, not once per
+    # family.
+    return (
+        documents.withColumn("_sh", word_shingles(F.col(text_col), shingle_n))
+        .withColumn("minhash", minhash_signature(F.col("_sh"), num_hashes))
+        .drop("_sh")
     )
 
 
@@ -400,14 +424,14 @@ def minhash_dedup(
 ) -> DataFrame:
     """End-to-end near-dup removal: LSH candidates → Jaccard ≥ threshold →
     drop the higher doc_id of each matched pair (greedy union toward min)."""
-    # The signature is the CPU-bound stage (num_hashes transforms over the
-    # shingle array); its parallelism is whatever the source scan gives.
-    # Few-large-files inputs (or a small unioned test corpus) arrive in a
-    # handful of splits and would compute the signature on that many cores
-    # — spread them first. The probe is the DataFrame's backing file list
-    # (public API, no RDD conversion on the hot path); at real scale
-    # maxPartitionBytes already yields >= defaultParallelism splits and the
-    # repartition never fires (no shuffle).
+    # The signature stage (num_hashes transforms over the shingle array)
+    # runs with whatever parallelism the source scan gives. Few-large-files
+    # inputs (or a small unioned test corpus) arrive in a handful of splits
+    # and would compute the signature on that many cores — spread them
+    # first. The probe is the DataFrame's backing file list (public API, no
+    # RDD conversion on the hot path); at real scale maxPartitionBytes
+    # already yields >= defaultParallelism splits and the repartition never
+    # fires (no shuffle).
     sc = documents.sparkSession.sparkContext
     n_files = len(documents.inputFiles())
     if 0 < n_files < sc.defaultParallelism:

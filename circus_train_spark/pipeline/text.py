@@ -185,10 +185,15 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     scan-local array arithmetic (no shuffle). The final join is
     doc_id-keyed on two already-doc_id-partitioned sides. Ties for the top
     word break deterministically: max (count, word) pair — highest count,
-    then lexicographically largest word.
+    then lexicographically largest word. The word array is projected once
+    as a column: the 2-gram lambda reads that column, where reading the
+    ``split`` expression would re-split the text for every 2-gram (a
+    lambda gets no subexpression elimination).
     """
-    words = _norm_words(F.col(text_col))
-    base = documents.filter(F.length(F.trim(F.col(text_col))) > 0)
+    base = documents.filter(F.length(F.trim(F.col(text_col))) > 0).select(
+        "doc_id", _norm_words(F.col(text_col)).alias("_w")
+    )
+    words = F.col("_w")
 
     word_rows = base.select("doc_id", F.explode(words).alias("w"))
     word_stats = (

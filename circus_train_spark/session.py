@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """Default driver heap: 16 GB, capped at 60% of the host's physical
+    memory so the heap never outgrows a host without swap."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, total_mb * 6 // 10)}m"
+
+
 def get_spark(
     app_name: str = "circus_train_spark",
     master: str | None = None,
@@ -20,7 +27,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``);
+    the driver heap to ``$SPARK_GRAFT_DRIVER_MEM`` (or ``_driver_mem()``).
     """
     # Make the package importable by Python workers (pandas UDFs) in local
     # mode regardless of the caller's cwd. On a real cluster the package is
@@ -64,7 +72,7 @@ def get_spark(
         # (submitted from a thread pool) share executors instead of FIFO
         # head-of-line blocking.
         .config("spark.scheduler.mode", "FAIR")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_mem())
     )
     # Shuffle/spill scratch location. On the shared sandbox host, /tmp sits
     # on a disk contended by other tenants; pointing scratch at a fast local

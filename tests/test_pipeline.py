@@ -99,6 +99,56 @@ def test_jaccard_exact_on_known_pair(spark):
     assert abs(j["jaccard"] - 0.5) < 1e-9
 
 
+SHINGLE_TEXTS = [
+    "",
+    "   ",
+    "one",
+    "one two",
+    "a b c a b c a b c",  # repeated n-grams
+    "tab\tand\nnewline  and\n\nblank line",
+    "Mixed CASE words mixed case WORDS",
+]
+
+
+def _py_shingles(text: str, n: int) -> set[str]:
+    """The shingle rule in plain Python: lower-cased, whitespace-collapsed
+    words; every word n-gram, or the whole text when it has fewer words."""
+    words = " ".join(text.lower().strip().split()).split(" ")
+    if len(words) < n:
+        return {" ".join(words)}
+    return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
+
+
+def test_word_shingles_match_python_rule(spark):
+    df = spark.createDataFrame(list(enumerate(SHINGLE_TEXTS)), "doc_id long, text string")
+    for n in (2, 3):
+        got = dict(df.select("doc_id", dedup.word_shingles(F.col("text"), n)).collect())
+        for i, t in enumerate(SHINGLE_TEXTS):
+            assert len(got[i]) == len(set(got[i])) and set(got[i]) == _py_shingles(t, n), (t, n)
+
+
+def test_with_minhash_equals_signature_of_materialised_shingles(spark, docs):
+    """``with_minhash`` gives the signature of the materialised shingles and
+    builds each row's shingle array once: its optimized plan holds as many
+    ``split(`` at 8 hash families as at 32."""
+    df = spark.createDataFrame(
+        [(10**9 + i, t) for i, t in enumerate(SHINGLE_TEXTS)], "doc_id long, text string"
+    ).unionByName(docs.select("doc_id", "text").limit(50))
+    shingles = df.select("doc_id", dedup.word_shingles(F.col("text")).alias("sh")).collect()
+    want = dict(
+        spark.createDataFrame(shingles, "doc_id long, sh array<string>")
+        .select("doc_id", dedup.minhash_signature(F.col("sh"), 8))
+        .collect()
+    )
+    assert dict(dedup.with_minhash(df, num_hashes=8).select("doc_id", "minhash").collect()) == want
+
+    def splits(num_hashes):
+        sig = dedup.with_minhash(df, num_hashes=num_hashes)
+        return sig._jdf.queryExecution().optimizedPlan().toString().count("split(")
+
+    assert splits(8) == splits(32)
+
+
 def test_simhash_near_dup_pairs(spark, docs):
     near = (
         docs.limit(3)
@@ -325,6 +375,7 @@ def test_paragraph_dedup_word_windows(spark):
         (1, "a b c d e f"),
         (2, "a b c d e f"),
         (3, "a b c x y z"),
+        (4, "P q r s t u v"),  # a short last window
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
@@ -334,6 +385,7 @@ def test_paragraph_dedup_word_windows(spark):
     assert (out[1]["n_paras"], out[1]["n_kept"], out[1]["text_clean"]) == (2, 2, "a b c d e f")
     assert (out[2]["n_kept"], out[2]["text_clean"]) == (0, "")
     assert (out[3]["n_kept"], out[3]["text_clean"]) == (1, "x y z")
+    assert (out[4]["n_paras"], out[4]["n_kept"], out[4]["text_clean"]) == (3, 3, "p q r s t u v")
 
 
 def test_kmeans_centroids_improve_ivf_recall(spark):

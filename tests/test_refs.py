@@ -174,3 +174,21 @@ def test_publish_keeps_staged_mor_delete_over_moved_head(table, tokens_df):
     assert pub.operation == "publish"
     assert len(t.delete_entries()) == 1
     assert t.scan().count() == 350 - n_deleted
+
+
+def test_expiry_keeps_unpublished_staged_snapshot_and_its_parent(table, tokens_df):
+    """A staged snapshot is on no ref's chain: expiry by count keeps it and
+    its parent (whose files a late publish's cherry-pick reads); only
+    ``older_than_ms`` expires it."""
+    import time
+
+    t = table
+    staged = t.append(_extra(tokens_df, 300, 380), num_files=1, stage_only=True)
+    t.append(_extra(tokens_df, 380, 430), num_files=1)
+    res = expire_snapshots(t, keep_last=1)
+    assert {staged.snapshot_id, staged.parent_id} <= set(res.retained_snapshots)
+    t.publish(staged.snapshot_id)
+    assert t.scan().count() == 300 + 80 + 50
+    res = expire_snapshots(t, keep_last=1, older_than_ms=int(time.time() * 1000) + 60_000)
+    assert staged.snapshot_id in res.expired_snapshots
+    assert t.scan().count() == 300 + 80 + 50
