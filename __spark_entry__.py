@@ -1729,8 +1729,10 @@ GROUP BY c_mktsegment, event_type
 
 
 def q_dedup_cc_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over a near-dup edge graph (iterative min-label
-    propagation as DataFrame joins — see ``dedup.connected_components``).
+    """Connected components over a near-dup edge graph (one collect and a
+    driver-side union-find while the edge list fits the driver budget,
+    min-label propagation on Spark above it — see
+    ``dedup.connected_components``).
 
     Edge generation itself is verified by the jaccard/minhash/simhash
     queries; HERE the subject is component *closure* (A~B, B~C must merge

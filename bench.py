@@ -170,14 +170,14 @@ def main() -> None:
     ap.add_argument("--skip-maintenance", action="store_true")
     args = ap.parse_args()
 
+    from circus_train_spark.session import get_spark, host_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cpus = args.cpus or host_cpus()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-
-    from circus_train_spark.session import get_spark
 
     spark = get_spark(
         "bench", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8)

@@ -19,6 +19,12 @@ token tables:
   manifest without moving a byte (the S3→S3 server-side copy analogue,
   ``S3S3Copier.java:138-199``: data never flows through the engine).
 
+Stored views travel with every mode: the source's views, their table
+references rewritten through the table mappings, are merged over the
+replica's own (a source view wins a name clash, a replica-local view
+survives). A view dropped at the source is therefore not dropped at the
+replica; drop it there with ``TokenTable.drop_view``.
+
 Every run stages one lineage unit per replicated partition
 (files-in/files-out/rows/bytes — the reference's per-partition counters,
 ``CopyMapper.java:142-145``) as soon as its data is written, commits once,

@@ -26,6 +26,12 @@ product. MinHash-LSH caps its 64-bit band buckets at ``MAX_BUCKET`` (1000)
 rows. SimHash caps whole fingerprints at ``MAX_BUCKET`` instead, because
 its 16-bit slice buckets fill from ordinary traffic at scale.
 
+Near-dup pairs are edges; ``connected_components`` closes them into
+clusters labelled by their minimum id. An edge list of up to
+``DRIVER_CC_THRESHOLD_EDGES`` rows costs one collect and a union-find on
+the driver; a larger one runs min-label propagation on Spark, restarting
+with large-star/small-star on a graph too deep for it.
+
 At 100 TB: every strategy shuffles fixed-width signatures (8–256 bytes/row),
 not documents.
 """
@@ -34,6 +40,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -531,9 +538,18 @@ def simhash_dup_pairs(with_fp: DataFrame, id_col: str = "doc_id", bands: int = 4
 #
 # Near-dup pairs from any of the strategies above are EDGES; dedup keeps
 # one representative per connected component, not per pair (A~B, B~C must
-# collapse A,B,C together even when A~C was never emitted). Reference
-# analogue: none (circus-train diffs partitions, it does not dedup rows) —
-# this is part of the engine's LLM-pipeline surface.
+# collapse A,B,C together even when A~C was never emitted). The graph is
+# small next to the corpus, one edge per verified pair, so an edge list of
+# up to DRIVER_CC_THRESHOLD_EDGES rows is collected once and closed by a
+# union-find on the driver; only a larger one runs on Spark, as min-label
+# propagation with a large-star/small-star restart for deep chains.
+# Reference analogue: none (circus-train diffs partitions, it does not
+# dedup rows) — this is part of the engine's LLM-pipeline surface.
+
+# Edge lists up to this many rows are closed on the driver. At 10^6 long
+# edges on a 4-core host the driver path takes about 4 s (union-find at
+# ~5*10^5 edges/s) and peaks at about 200 MiB of driver Python heap.
+DRIVER_CC_THRESHOLD_EDGES = 1_000_000
 
 
 def connected_components(
@@ -545,36 +561,48 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected edge list → (id, component).
 
+    Every vertex is labelled with the minimum id of its component; ``id``
+    and ``component`` have the type of the ``src`` column. Self-loops and
+    edges with a NULL endpoint carry no connectivity and do not introduce
+    their vertices.
+
     ``algorithm``:
 
-    - ``"label"`` — iterative min-label propagation: each round every
-      vertex adopts the minimum label among itself and its neighbours.
-      Rounds = graph diameter; near-dup clusters are shallow
+    - ``"auto"`` (default) — up to ``DRIVER_CC_THRESHOLD_EDGES`` edges, ONE
+      Spark job collects them (``limit(budget + 1)`` as Arrow) and a
+      union-find closes them on the driver, with path halving and the
+      smaller root winning a union, so each root is its component's
+      minimum; the labels come back through ``createDataFrame`` under an
+      explicit schema. Above the budget: label propagation, and if
+      ``max_iter`` rounds pass without a fixpoint, a restart with the star
+      algorithm instead of partial labels.
+    - ``"label"`` — iterative min-label propagation on Spark: each round
+      every vertex adopts the minimum label among itself and its
+      neighbours. Rounds = graph diameter; near-dup clusters are shallow
       (stars/cliques), so 3-5 rounds in practice.
-    - ``"star"`` — alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", SoCC'14):
+    - ``"star"`` — alternating large-star/small-star on Spark (Kiveris et
+      al., "Connected Components in MapReduce and Beyond", SoCC'14):
       O(log² n) rounds regardless of diameter — the path for adversarial
       chain-shaped graphs.
-    - ``"auto"`` (default) — label propagation; if ``max_iter`` rounds pass
-      without a fixpoint, restart with the star algorithm instead of
-      returning partial labels.
 
-    Scale notes (100 TB): every round of either algorithm is hash joins +
-    groupBy-min over fixed-width (vertex, vertex) rows — never payload.
-    ``localCheckpoint`` cuts the lineage so plans don't grow per round.
-    The label-prop convergence probe is a LIMIT-1 existence check (AQE
-    stops at the first changed row); the star probe is a count+hash-sum
-    signature (one agg job; a signature collision would only cost one
-    extra no-op round, never wrong labels, because the edge map is already
-    a fixpoint once it stops changing).
+    Scale notes (100 TB): the driver path is bounded by the budget, so its
+    driver memory is too; larger graphs stay on Spark. There every round of
+    either algorithm is hash joins + groupBy-min over fixed-width (vertex,
+    vertex) rows — never payload — and ``localCheckpoint`` cuts the lineage
+    so plans don't grow per round. The label-prop convergence probe is a
+    LIMIT-1 existence check (AQE stops at the first changed row).
     """
     if algorithm not in ("label", "star", "auto"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
+    real = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    real = real.filter(F.col("a") != F.col("b"))
+    if algorithm == "auto":
+        head = real.limit(DRIVER_CC_THRESHOLD_EDGES + 1).toArrow()
+        if head.num_rows <= DRIVER_CC_THRESHOLD_EDGES:
+            return _driver_components(edges.sparkSession, head, edges.schema[src].dataType)
     if algorithm == "star":
-        return _star_components(edges, src, dst)
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.filter(F.col("a") != F.col("b")).persist()
+        return _star_components(real)
+    sym = _both_ways(real, F.col("a"), F.col("b"), F.col("b"), F.col("a")).persist()
     labels = (
         sym.select(F.col("a").alias("id")).distinct()
         .withColumn("component", F.col("id"))
@@ -605,14 +633,42 @@ def connected_components(
     sym.unpersist()
     if not converged and algorithm == "auto":
         # diameter > max_iter (chain-shaped graph): the O(log² n) path
-        return _star_components(edges, src, dst)
+        return _star_components(real)
     return labels
 
 
-def _star_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_rounds: int = 50
-) -> DataFrame:
-    """Alternating large-star/small-star CC → (id, component).
+def _driver_components(spark, head: pa.Table, id_type: T.DataType) -> DataFrame:
+    """Union-find over the collected (a, b) edges → (id, component)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(head["a"].to_numpy().tolist(), head["b"].to_numpy().tolist()):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    typ = head.schema.field("a").type
+    ids = list(parent)
+    labels = pa.table(
+        {"id": pa.array(ids, typ), "component": pa.array([find(v) for v in ids], typ)}
+    )
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
+    )
+    return spark.createDataFrame(labels, schema)
+
+
+def _star_components(real: DataFrame, max_rounds: int = 50) -> DataFrame:
+    """Alternating large-star/small-star CC over (a, b) edges without
+    self-loops or NULLs → (id, component).
 
     Both operations keep one invariant: every edge connects two vertices
     of the same component, and each round strictly lowers the pointer
@@ -625,22 +681,20 @@ def _star_components(
 
     Each is ONE groupBy-min + ONE hash join over (vertex, vertex) rows.
     Converges in O(log² n) rounds to the star graph (v → component-min),
-    independent of graph diameter.
+    independent of graph diameter. The convergence probe is a
+    count+hash-sum signature (one agg job; a signature collision would only
+    cost one extra no-op round, never wrong labels, because the edge map is
+    already a fixpoint once it stops changing).
     """
-    # self-loops carry no connectivity and (as in label mode) do not even
-    # introduce their vertex
-    real = edges.filter(F.col(src) != F.col(dst))
     verts = (
-        real.select(F.col(src).alias("id"))
-        .union(real.select(F.col(dst).alias("id")))
+        real.select(F.explode(F.array("a", "b")).alias("id"))
         .distinct()
         .localCheckpoint()
     )
     # canonical orientation: a = hi, b = lo
     e = (
         real.select(
-            F.greatest(F.col(src), F.col(dst)).alias("a"),
-            F.least(F.col(src), F.col(dst)).alias("b"),
+            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         )
         .distinct()
         .localCheckpoint()
@@ -648,7 +702,7 @@ def _star_components(
     prev_sig = None
     for _ in range(max_rounds):
         # large-star: symmetric view, neighbours above u re-point to min
-        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        sym = _both_ways(e, F.col("a"), F.col("b"), F.col("b"), F.col("a"))
         mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
         mins = mins.select("a", F.least("a", "mn").alias("m"))
         ls = (
@@ -660,9 +714,9 @@ def _star_components(
         # small-star: smaller neighbourhoods (and u itself) re-point to min
         mins = e.groupBy("a").agg(F.min("b").alias("m"))
         joined = e.join(mins, "a")
-        ss = joined.select(
-            F.greatest("b", "m").alias("a"), F.least("b", "m").alias("b")
-        ).union(joined.select("a", F.col("m").alias("b")))
+        ss = _both_ways(
+            joined, F.greatest("b", "m"), F.least("b", "m"), F.col("a"), F.col("m")
+        )
         e = ss.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -678,3 +732,14 @@ def _star_components(
     return verts.join(
         parents.withColumnRenamed("a", "id"), "id", "left"
     ).select("id", F.coalesce("component", F.col("id")).alias("component"))
+
+
+def _both_ways(df: DataFrame, a1: Column, b1: Column, a2: Column, b2: Column) -> DataFrame:
+    """Rows (a1, b1) and (a2, b2) of every row of ``df``, as (a, b). An
+    array of two structs, not a Union: Catalyst's constraint propagation
+    over a Union whose branches differ in nullability fails with ``key not
+    found`` (Spark 4.1, ids from ``spark.range``)."""
+    pair = F.array(
+        F.struct(a1.alias("a"), b1.alias("b")), F.struct(a2.alias("a"), b2.alias("b"))
+    )
+    return df.select(F.inline(pair))

@@ -19,6 +19,12 @@ def _driver_mem() -> str:
     return f"{min(16 * 1024, total_mb * 6 // 10)}m"
 
 
+def host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs of this process's
+    affinity mask (not the host's total)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "circus_train_spark",
     master: str | None = None,
@@ -28,7 +34,8 @@ def get_spark(
     """Build (or reuse) a SparkSession configured for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``);
-    the driver heap to ``$SPARK_GRAFT_DRIVER_MEM`` (or ``_driver_mem()``).
+    ``spark.sql.shuffle.partitions`` to ``host_cpus()``, at least 8; the
+    driver heap to ``$SPARK_GRAFT_DRIVER_MEM`` (or ``_driver_mem()``).
     """
     # Make the package importable by Python workers (pandas UDFs) in local
     # mode regardless of the caller's cwd. On a real cluster the package is
@@ -43,10 +50,7 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(8, int(cpus)) if cpus else 32
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = max(8, host_cpus())
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from circus_train_spark.pipeline import dedup
 from circus_train_spark.pipeline.dedup import connected_components
 from circus_train_spark.pipeline.text import repetition_stats
 
@@ -128,6 +130,39 @@ class TestStreamingWindowed:
         assert got[("click", "2024-01-01 10:00:00")] == (2, 400)
 
 
+# (schema, edges, expected {id: component}) per graph: the driver path and
+# the distributed path must both give exactly this
+GRAPHS = {
+    "chain": ("id_a long, id_b long", [(i, i + 1) for i in range(1, 101)],
+              {i: 1 for i in range(1, 102)}),
+    # the self-loop-only vertex 20 is absent
+    "mixed": ("id_a long, id_b long",
+              [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 20), (30, 31)],
+              {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 30: 30, 31: 30}),
+    "string": ("id_a string, id_b string",
+               [("doc-b", "doc-a"), ("doc-b", "doc-c"), ("doc-x", "doc-y")],
+               {"doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
+                "doc-x": "doc-x", "doc-y": "doc-x"}),
+    # an edge with a NULL endpoint introduces neither of its vertices
+    "null_endpoint": ("id_a long, id_b long",
+                      [(1, 2), (2, None), (None, 7), (None, None), (5, 4)],
+                      {1: 1, 2: 1, 4: 4, 5: 4}),
+    "int": ("id_a int, id_b int", [(3, 2), (2, 1)], {1: 1, 2: 1, 3: 1}),
+    "empty": ("id_a long, id_b long", [], {}),
+}
+
+
+def _count_jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestStarComponents:
     """Alternating large-star/small-star: O(log^2 n) rounds, diameter-proof."""
 
@@ -139,7 +174,9 @@ class TestStarComponents:
         got = {r["id"]: r["component"] for r in cc.collect()}
         assert got == {i: 1 for i in range(1, 102)}
 
-    def test_auto_falls_back_on_deep_chain(self, spark):
+    def test_auto_falls_back_on_deep_chain(self, spark, monkeypatch):
+        # over the driver budget, auto runs label propagation first
+        monkeypatch.setattr(dedup, "DRIVER_CC_THRESHOLD_EDGES", -1)
         edges = _edges(spark, [(i, i + 1) for i in range(1, 101)])
         cc = connected_components(edges, max_iter=3, algorithm="auto")
         got = {r["id"]: r["component"] for r in cc.collect()}
@@ -162,6 +199,39 @@ class TestStarComponents:
             "doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
             "doc-x": "doc-x", "doc-y": "doc-x",
         }
+
+
+class TestDriverComponents:
+    """Under the edge budget, ``auto`` closes the graph with a union-find on
+    the driver; it must label exactly as the distributed paths do."""
+
+    @pytest.mark.parametrize("graph", sorted(GRAPHS))
+    def test_driver_matches_distributed(self, spark, monkeypatch, graph):
+        schema, pairs, want = GRAPHS[graph]
+        df = spark.createDataFrame(pairs, schema)
+        driver = connected_components(df)
+        star = connected_components(df, algorithm="star")
+        # a budget below any edge count sends auto to label propagation
+        monkeypatch.setattr(dedup, "DRIVER_CC_THRESHOLD_EDGES", -1)
+        label = connected_components(df)
+        for cc in (driver, label, star):
+            assert {r["id"]: r["component"] for r in cc.collect()} == want
+            assert cc.columns == ["id", "component"]
+            assert [f.dataType for f in cc.schema] == [df.schema[0].dataType] * 2
+
+    def test_star_on_non_nullable_ids(self, spark):
+        # ids from spark.range are non-nullable; a Union of the star rounds'
+        # two orientations then failed in Catalyst's constraint propagation
+        edges = spark.range(1, 101).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        cc = connected_components(edges, algorithm="star")
+        got = {r["id"]: r["component"] for r in cc.collect()}
+        assert got == {i: 1 for i in range(1, 102)}
+
+    def test_under_budget_graph_runs_at_most_three_jobs(self, spark):
+        edges = _edges(spark, [(i, i + 1) for i in range(1, 101)])
+        assert _count_jobs(spark, lambda: connected_components(edges)) <= 3
 
 
 class TestRetrievalOps:
